@@ -32,7 +32,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * list. Occurrences inside single-quoted literals are data. */
 object MetaSql {
 
-  private val Rx = "`([A-Za-z_][A-Za-z_0-9.]*)\\$([A-Za-z_]+)`".r
+  // an optional `[catalog.]schema.` qualifier (bare or backticked legs —
+  // Trino's `iceberg.demo."t$snapshots"` arrives as demo.`t$snapshots`)
+  // belongs to the table name and to the replaced span
+  private val Rx = ("((?:(?:`[A-Za-z_]\\w*`|\\b[A-Za-z_]\\w*)\\s*\\.\\s*){0,2})" +
+    "`([A-Za-z_][A-Za-z_0-9.]*)\\$([A-Za-z_]+)`").r
   private val Served = Set("snapshots", "history", "refs", "files",
     "partitions", "manifests", "properties")
 
@@ -55,7 +59,12 @@ object MetaSql {
     var last = 0
     Rx.findAllMatchIn(sql).foreach { m =>
       if (m.start >= last && !insideLiteral(sql, m.start)) {
-        val (table, rel) = (m.group(1), m.group(2).toLowerCase)
+        // a two-leg qualifier leads with the catalog, which names no
+        // part of the table here
+        val schema = m.group(1).split('.').map(_.trim.stripPrefix("`")
+          .stripSuffix("`")).filter(_.nonEmpty).takeRight(1)
+        val (table, rel) =
+          ((schema :+ m.group(2)).mkString("."), m.group(3).toLowerCase)
         if (!Served.contains(rel))
           throw new IllegalArgumentException(
             s"metadata table $$$rel is not served — available: " +

@@ -7,6 +7,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.Scoped
 import org.apache.spark.sql.types._
 
 /** The Trino v1 client wire protocol (`POST /v1/statement` + `nextUri`
@@ -50,15 +51,21 @@ import org.apache.spark.sql.types._
   *   - Incoming `X-Trino-Session` properties are applied for the
   *     statement's execution where a Spark equivalent exists
   *     (`join_distribution_type` → broadcast-threshold gate; any
-  *     `spark.`-prefixed key → session conf, set and RESTORED around
-  *     the run) and echoed otherwise — a property the engine cannot
-  *     honor never silently changes semantics.
+  *     `spark.`-prefixed key → session conf) and echoed otherwise — a
+  *     property the engine cannot honor never silently changes
+  *     semantics.
   *   - `USE [catalog.]schema` answers `X-Trino-Set-Catalog` +
   *     `X-Trino-Set-Schema` (unknown catalog/schema refuses — Trino's
   *     NOT_FOUND, never a silent accept); the client's echoed
   *     `X-Trino-Schema` scopes that statement's unqualified table
-  *     names (current-database set + RESTORED around the run, under
-  *     the same write-side isolation as conf overrides).
+  *     names.
+  *   - Both kinds of client state are scoped to the one statement the
+  *     way a Trino coordinator scopes them to one query:
+  *     [[org.apache.spark.sql.graft.Scoped.run]] runs the statement on
+  *     a clone of the session carrying the overrides and the schema,
+  *     so the shared session's conf and current database never change.
+  *     A statement with no override and a schema echo equal to the
+  *     current database runs on the shared session directly.
   *   - `PREPARE name FROM <sql>` answers `X-Trino-Added-Prepare:
   *     name=urlencoded_sql` (`DEALLOCATE PREPARE` → the deallocate
   *     header); the client echoes its prepared map back via
@@ -107,15 +114,6 @@ object StatementHttp {
     val queries = new java.util.concurrent.ConcurrentHashMap[String, QueryState]()
     val completed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val counter = new java.util.concurrent.atomic.AtomicLong(0L)
-    /** Conf-override isolation for THIS server's statements: plain
-      * statements share the read side; a session-conf apply + run +
-      * restore holds the write side. Per-server (a JVM-global lock
-      * would serialize unrelated servers over different sessions for
-      * no isolation benefit). Honest limit: Spark session confs are
-      * session-global, so the lock isolates wire-vs-wire only — work
-      * submitted on the same SparkSession OUTSIDE this server during a
-      * conf window still sees the override. */
-    val execLock = new java.util.concurrent.locks.ReentrantReadWriteLock()
   }
 
   /** Mark a query completed (idempotent — a RETRIED final-page GET must
@@ -177,7 +175,7 @@ object StatementHttp {
   // identifier legs accept Trino's double-quoted spelling too ("demo",
   // "iceberg"."demo") — a quoted USE slipping past this match would
   // fall through to Spark's own USE, which mutates the session's
-  // current database GLOBALLY with no restore (round-16 review);
+  // current database GLOBALLY (round-16 review);
   // [[runStatement]] additionally refuses any USE that reaches it
   private val UseRx =
     "(?is)^USE\\s+(?:\"?([A-Za-z_]\\w*)\"?\\.)?\"?([A-Za-z_]\\w*)\"?\\s*;?\\s*$".r
@@ -363,11 +361,10 @@ object StatementHttp {
     }
   }
 
-  /** Spark-equivalent session properties, applied around ONE statement's
-    * execution and restored after (the wire is the interactive plane;
-    * per-statement scoping keeps concurrent clients from leaking confs
-    * into each other — enforced by running the apply+execute+restore
-    * under one lock). `join_distribution_type=PARTITIONED` disables
+  /** Spark-equivalent session properties, scoped to ONE statement's
+    * execution: [[Scoped.run]] sets them on a clone of the session, so
+    * neither another client's statement nor work planned on the shared
+    * session ever sees them. `join_distribution_type=PARTITIONED` disables
     * broadcast (Trino's distributed-join forcing knob);
     * `BROADCAST`/`AUTOMATIC` restore the default gate. `spark.*` keys
     * pass through to the session conf verbatim. Anything else is
@@ -384,37 +381,19 @@ object StatementHttp {
       case _ => None
     }
 
-  private def applySession(spark: SparkSession,
-      applied: Map[String, String]): Map[String, Option[String]] = {
-    val saved = applied.map { case (k, _) =>
-      k -> (try Some(spark.conf.get(k)) catch { case _: Exception => None })
-    }
-    applied.foreach { case (k, v) => spark.conf.set(k, v) }
-    saved
-  }
-
-  private def restoreSession(spark: SparkSession,
-      saved: Map[String, Option[String]]): Unit =
-    saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-
-
   /** Execute one statement's SQL text (the query's own, or a prepared
-    * statement's bound text) under the session-override discipline:
-    * override-free statements run concurrently (read side); a conf- or
-    * schema-mutating apply+run+restore takes the exclusive write side
-    * so its temporary session state can never leak into a
-    * concurrently-executing plain statement. */
+    * statement's bound text) under its client's session state: the
+    * statement's conf overrides and echoed schema apply through
+    * [[Scoped.run]], on a cloned session when there is anything to
+    * change and on the shared one otherwise. */
   private def runStatement(spark: SparkSession, q: QueryState,
-      sqlText: String, maxRows: Int, reg: Registry): Unit = {
+      sqlText: String, maxRows: Int): Unit = {
     val mapped = TrinoSql.toSpark(sqlText)
     // backstop for the session-mutation class: a USE spelling the
     // dedicated handler did not recognize must REFUSE here — passed
     // through, Spark's own USE would switch the shared session's
-    // current database globally, with no restore and no Set-Schema
-    // header (round-16 review: `USE "demo"` took this path)
+    // current database globally, with no Set-Schema header (round-16
+    // review: `USE "demo"` took this path)
     if (mapped.trim.regionMatches(true, 0, "USE ", 0, 4))
       throw new IllegalArgumentException(
         "unsupported USE spelling — use USE [catalog.]schema")
@@ -423,7 +402,7 @@ object StatementHttp {
     // surface — clients list properties right after SET SESSION, and
     // the answer is per-query-state, so it must come from `q`, not from
     // the shared Spark conf (another client's temporary override must
-    // never show here). Pure read side: no lock, no mutation.
+    // never show here). Pure read: no session state applies.
     val ShowSessionRx =
       "(?is)^\\s*SHOW\\s+SESSION(?:\\s+LIKE\\s+'((?:[^']|'')*)')?\\s*;?\\s*$".r
     ShowSessionRx.findFirstMatchIn(sqlText).foreach { m =>
@@ -446,8 +425,8 @@ object StatementHttp {
       q.schema = filtered.schema
       return
     }
-    def run(): Unit = {
-      val df = Lakehouse.sql(spark, mapped)
+    Scoped.run(spark, sessionConfs(q.session), q.defaultSchema) { session =>
+      val df = Lakehouse.sql(session, mapped)
       val collected = df.limit(maxRows + 1).collect()
       if (collected.length > maxRows)
         throw new IllegalStateException(
@@ -455,48 +434,6 @@ object StatementHttp {
             "use the CSV delivery plane for bulk results")
       q.rows = collected
       q.schema = df.schema
-    }
-    val confs = sessionConfs(q.session)
-    def runWriteSide(): Unit = {
-      reg.execLock.writeLock().lock()
-      try {
-        val saved = applySession(spark, confs)
-        // decided UNDER the write lock (no writer can be mid-mutation)
-        val wantDb = q.defaultSchema.filter(_ != spark.catalog.currentDatabase)
-        val savedDb = wantDb.map(_ => spark.catalog.currentDatabase)
-        try {
-          wantDb.foreach(spark.catalog.setCurrentDatabase)
-          run()
-        } finally {
-          savedDb.foreach(spark.catalog.setCurrentDatabase)
-          restoreSession(spark, saved)
-        }
-      } finally reg.execLock.writeLock().unlock()
-    }
-    if (confs.nonEmpty) runWriteSide()
-    else {
-      // a schema echo matching the CURRENT database needs no mutation —
-      // it stays on the concurrent read side (after one USE the client
-      // echoes X-Trino-Schema on EVERY request; write-locking each of
-      // those would serialize the whole wire plane — round-16 review).
-      // The match is decided UNDER the read lock (round-16 advisor:
-      // deciding it before acquisition raced a write-locked statement's
-      // temporary setCurrentDatabase — the read path could observe the
-      // writer's schema, take the cheap side, then run against the
-      // RESTORED database): while any read lock is held no writer is
-      // mid-mutation, so currentDatabase here is the restored default.
-      reg.execLock.readLock().lock()
-      val needsSwitch =
-        try q.defaultSchema.exists(_ != spark.catalog.currentDatabase)
-        catch {
-          case t: Throwable => reg.execLock.readLock().unlock(); throw t
-        }
-      if (!needsSwitch) {
-        try run() finally reg.execLock.readLock().unlock()
-      } else {
-        reg.execLock.readLock().unlock()
-        runWriteSide()
-      }
     }
   }
 
@@ -510,9 +447,9 @@ object StatementHttp {
     // uses): two concurrent GETs of one nextUri — a client retry racing
     // its own timed-out request — must not BOTH see rows==null and run
     // the statement twice; with side-effecting paths (EXECUTE of a
-    // prepared INSERT, session-conf apply/restore) double-execution
-    // duplicates writes (round-16 advisor). The loser blocks, re-checks,
-    // and serves the winner's cached result.
+    // prepared INSERT) double-execution duplicates writes (round-16
+    // advisor). The loser blocks, re-checks, and serves the winner's
+    // cached result.
     q.synchronized { if (q.rows == null && q.failed.isEmpty) {
       try {
         q.sql match {
@@ -547,7 +484,7 @@ object StatementHttp {
               .map(u => splitArgs(u.trim.stripSuffix(";")))
               .getOrElse(Seq.empty)
             runStatement(spark, q,
-              bindParameters(text.replace("''", "'"), args), maxRows, reg)
+              bindParameters(text.replace("''", "'"), args), maxRows)
           case ExecuteRx(name, usingRaw) =>
             val text = q.prepared.getOrElse(name,
               throw new IllegalArgumentException(
@@ -558,7 +495,7 @@ object StatementHttp {
             val args = Option(usingRaw)
               .map(u => splitArgs(u.trim.stripSuffix(";")))
               .getOrElse(Seq.empty)
-            runStatement(spark, q, bindParameters(text, args), maxRows, reg)
+            runStatement(spark, q, bindParameters(text, args), maxRows)
           case UseRx(cat, sch) =>
             // Trino's USE answers X-Trino-Set-Catalog/-Schema response
             // headers; the client carries them back as X-Trino-Schema.
@@ -573,7 +510,7 @@ object StatementHttp {
             q.setSchema = Some(sch)
             q.rows = Array(Row(true))
             q.schema = StructType(Seq(StructField("result", BooleanType)))
-          case _ => runStatement(spark, q, q.sql, maxRows, reg)
+          case _ => runStatement(spark, q, q.sql, maxRows)
         }
       } catch { case scala.util.control.NonFatal(e) => q.failed = Some(e) }
     } }

@@ -112,7 +112,12 @@ object Als {
     * for the JOIN form tripled the stat bytes — the fix is not where the
     * ratings sit but that the accumulation's OWN key matches the stored
     * partitioning, which only the broadcast join makes possible. Beyond
-    * the key limit [[solveSide]]'s shuffle form is unchanged. */
+    * the key limit [[solveSide]]'s shuffle form is unchanged.
+    *
+    * Returns the solved side already checkpointed, and destroys the
+    * broadcast once that checkpoint has materialized: nothing reads the
+    * fixed side's map after that, and at the key limit it is ~360 MB
+    * per half-iteration. */
   private def solveSideBroadcast(spark: org.apache.spark.sql.SparkSession,
       rBySolve: org.apache.spark.rdd.RDD[(Long, (Long, Double))],
       fixed: DataFrame, rank: Int, lambda: Double): DataFrame = {
@@ -132,7 +137,9 @@ object Als {
         },
         mergeStats(statSize))
       .map { case (sid, st) => (sid, choleskySolve(st, rank, tri, lambda).toSeq) }
-    spark.createDataset(solved).toDF("id", "f")
+    val out = spark.createDataset(solved).toDF("id", "f").localCheckpoint()
+    bc.destroy()
+    out
   }
 
   /** Fold one rating into the packed stat array: upper-triangle ffT
@@ -273,9 +280,7 @@ object Als {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       for (_ <- 1 to iters) {
         users = solveSideBroadcast(spark, rByU, items, rank, lambda)
-          .localCheckpoint()
         items = solveSideBroadcast(spark, rByI, users, rank, lambda)
-          .localCheckpoint()
       }
       rByU.unpersist(false)
       rByI.unpersist(false)

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Scoped
 
 /** Distributed byte-pair-encoding (BPE) merge training — the tokenizer-
   * building half of a training-data pipeline (Sennrich et al. 2016; the
@@ -83,11 +84,15 @@ object BpeTrainer {
     // instead of two, and the final round's re-map (never read) is never
     // computed at all. The previous generation unpersists only after the
     // collect proves its successor materialized.
-    // LoopScope (r19): every per-round query is vocabulary-bounded —
-    // AQE's stage-per-job execution added one extra job per round of
-    // pure scheduling (see WordPiece.train, where it was ~5).
-    val loopWidth = words.rdd.getNumPartitions
-    LoopScope.bounded(docs.sparkSession, loopWidth) {
+    // The loop runs on a scoped session with AQE off and the shuffle
+    // width pinned to the word table's (r19): every per-round query is
+    // vocabulary-bounded — AQE's stage-per-job execution added one extra
+    // job per round of pure scheduling (see WordPiece.train, where it
+    // was ~5).
+    val loopWidth = math.max(1, words.rdd.getNumPartitions)
+    Scoped.run(docs.sparkSession, Map("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> loopWidth.toString), None) { scoped =>
+    words = Scoped.reroot(words, scoped)
     var prev: Option[DataFrame] = None
     val merges = Seq.newBuilder[Merge]
     var rank = 0

@@ -139,38 +139,31 @@ object Decontaminate {
       fpp: Double = 1e-4,
       expectedShingles: Long = -1L,
       shinglesPerDocHint: Int = 128): Array[Byte] = {
-    import org.apache.spark.sql.graft.SketchExprs
+    import org.apache.spark.sql.graft.{Scoped, SketchExprs}
 
     val nItems = math.max(1024L,
       if (expectedShingles > 0) expectedShingles
       else graft.engine.TableStats.rowCountNoJob(test) * shinglesPerDocHint)
     val bitsPerItem = -math.log(fpp) / (math.log(2) * math.log(2))
     val numBits = math.min(1L << 27, math.max(64L, (nItems * bitsPerItem).ceil.toLong))
-    // Lift BloomFilterAggregate's silent conf clamps (see docstring) up
-    // to the sizes this call actually requests.
-    val spark = test.sparkSession
-    val prevBits = spark.conf.getOption("spark.sql.optimizer.runtime.bloomFilter.maxNumBits")
-    val prevItems = spark.conf.getOption("spark.sql.optimizer.runtime.bloomFilter.maxNumItems")
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
-      math.max(numBits, 1L << 26))
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
-      math.max(nItems, 4000000L))
-
     val testHashes = Dedup.shingleSets(test, idCol, textCol, shingleK)
       .select(explode_outer(col("sh")).as("__sh"))
       .select(xxhash64(col("__sh")).as("__h"))
       .distinct()
+    // Lift BloomFilterAggregate's silent conf clamps (see docstring) up
+    // to the sizes this call actually requests — on a scoped session, so
+    // no other query sees the lifted clamps.
     // Bounded driver read: ONE binary cell, ≤ numBits/8 bytes by
     // construction — sketch state, not data (the catalog-listing class
     // of collect).
-    try testHashes
-      .agg(SketchExprs.bloomAgg(col("__h"), nItems, numBits).as("__bf"))
-      .head().getAs[Array[Byte]]("__bf")
-    finally {
-      def restore(k: String, prev: Option[String]): Unit =
-        prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-      restore("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", prevBits)
-      restore("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", prevItems)
+    Scoped.run(test.sparkSession, Map(
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" ->
+        math.max(numBits, 1L << 26).toString,
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" ->
+        math.max(nItems, 4000000L).toString), None) { scoped =>
+      Scoped.reroot(testHashes, scoped)
+        .agg(SketchExprs.bloomAgg(col("__h"), nItems, numBits).as("__bf"))
+        .head().getAs[Array[Byte]]("__bf")
     }
   }
 

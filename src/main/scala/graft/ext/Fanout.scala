@@ -41,11 +41,13 @@ object Fanout {
     * plan, never `df.rdd`: under AQE, touching `.rdd` finalizes the
     * adaptive plan and eagerly executes any upstream shuffle stages —
     * a silent double execution (ADVICE r18). Leaf split planning is
-    * driver-side only; no job runs. */
+    * driver-side only; no job runs. A leaf whose probe fails counts as
+    * width 0: an unknown width must fail safe toward the spread,
+    * never pass as "already wide" and leave the stage on one core. */
   def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     val leafParts = df.queryExecution.sparkPlan.collectLeaves()
-      .map(l => scala.util.Try(l.execute().getNumPartitions).getOrElse(target))
+      .map(l => scala.util.Try(l.execute().getNumPartitions).getOrElse(0))
     val cur = if (leafParts.isEmpty) target else leafParts.max
     if (cur < target) df.repartition(target) else df
   }

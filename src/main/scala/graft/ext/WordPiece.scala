@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Scoped
 
 /** Distributed WordPiece tokenizer training — the third major subword
   * family (Schuster & Nakajima 2012; the BERT tokenizer), completing the
@@ -99,12 +100,15 @@ object WordPiece {
     var words = wordTable(docs, textCol).localCheckpoint()
     // Lazy per-round checkpoints — one job per round instead of two, and
     // the final round's re-map is never computed (see [[BpeTrainer]]).
-    // The whole loop runs inside [[LoopScope.bounded]] (r19): every
-    // per-round query is vocabulary-bounded, and AQE's stage-per-job
-    // execution cost ~5 jobs/round of pure scheduling (q189 measured 75
-    // jobs for 1.6 s of task time).
-    val loopWidth = words.rdd.getNumPartitions
-    LoopScope.bounded(docs.sparkSession, loopWidth) {
+    // The whole loop runs on a scoped session with AQE off and the
+    // shuffle width pinned to the word table's (r19): every per-round
+    // query is vocabulary-bounded, and AQE's stage-per-job execution cost
+    // ~5 jobs/round of pure scheduling (q189 measured 75 jobs for 1.6 s
+    // of task time). Corpus-sized work stays outside with AQE on.
+    val loopWidth = math.max(1, words.rdd.getNumPartitions)
+    Scoped.run(docs.sparkSession, Map("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> loopWidth.toString), None) { scoped =>
+    words = Scoped.reroot(words, scoped)
     var prev: Option[DataFrame] = None
     val out = Seq.newBuilder[Merge]
     var rank = 0

@@ -18,14 +18,18 @@ import org.apache.spark.sql.functions.col
   * planner cannot see that the stored blocks already satisfy the
   * aggregation's clustered distribution.
   *
-  * [[repartitionCheckpoint]] hash-partitions `df` by `keys`, checkpoints
-  * the blocks, and re-wraps the checkpointed RDD in a LogicalRDD that
-  * asserts `HashPartitioning(keys, actualNumPartitions)`. The assertion
-  * is sound for any AQE-coalesced read of that shuffle: coalescing only
-  * MERGES adjacent hash buckets, so "all rows of one key live in exactly
-  * one stored partition" still holds, whatever the final partition
-  * count. The repartition happens INSIDE the helper so the invariant
-  * cannot be broken by a caller passing differently-partitioned data. */
+  * [[repartitionCheckpoint]] hash-partitions `df` by `keys` into exactly
+  * `spark.sql.shuffle.partitions` buckets, checkpoints the blocks, and
+  * re-wraps the checkpointed RDD in a LogicalRDD that asserts
+  * `HashPartitioning(keys, N)`. The width is explicit because the
+  * assertion promises more than "all rows of one key live in one
+  * partition": it promises key k lives in partition `hash(k) mod N`, and
+  * the planner co-partitions a join's other side on exactly that. An
+  * AQE-coalesced read (what a width-less repartition gets) merges
+  * adjacent buckets and breaks the mod-N layout, so a sort-merge join
+  * against an independently exchanged side would miss matches. The
+  * repartition happens INSIDE the helper so the invariant cannot be
+  * broken by a caller passing differently-partitioned data. */
 object CheckpointOps {
 
   /** `df.repartition(keys).localCheckpoint()` with the hash partitioning
@@ -33,7 +37,8 @@ object CheckpointOps {
     * and joins clustered on (a superset of) `keys` need no new Exchange. */
   def repartitionCheckpoint(df: DataFrame, keys: String*): DataFrame = {
     require(keys.nonEmpty, "need at least one partitioning key")
-    val ck = df.repartition(keys.map(col): _*).localCheckpoint()
+    val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val ck = df.repartition(width, keys.map(col): _*).localCheckpoint()
     val cds = ck.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
     val session: ClassicSession = cds.sparkSession
     val attrs = cds.queryExecution.analyzed.output
@@ -41,8 +46,9 @@ object CheckpointOps {
       throw new IllegalArgumentException(
         s"repartitionCheckpoint: no column '$k' in ${attrs.map(_.name)}")))
     val rdd = cds.queryExecution.toRdd
-    val plan = new LogicalRDD(attrs, rdd,
-      HashPartitioning(partCols, math.max(1, rdd.getNumPartitions)),
+    require(rdd.getNumPartitions == width,
+      s"repartitionCheckpoint: ${rdd.getNumPartitions} stored partitions, expected $width")
+    val plan = new LogicalRDD(attrs, rdd, HashPartitioning(partCols, width),
       Nil, false, None)(session, None, None)
     Dataset.ofRows(session, plan)
   }

@@ -773,4 +773,44 @@ class StatementHttpSpec extends SparkSpec {
       assert(after.statusCode() === 404)
     } finally server.stop()
   }
+
+  /** A committed table in schema `demo` (one UPDATE = one commit, plus
+    * tag `v1`) — the fixture of the schema-qualified metadata spellings. */
+  private def committedDemoTable(server: StatementHttp.Server): String = {
+    val t = "meta_wire_" + java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    Seq(
+      "CREATE SCHEMA IF NOT EXISTS iceberg.demo",
+      s"CREATE TABLE iceberg.demo.$t (id bigint, status varchar)",
+      s"INSERT INTO iceberg.demo.$t VALUES (1, 'pending'), (2, 'shipped')",
+      s"UPDATE iceberg.demo.$t SET status = 'done' WHERE id = 1")
+      .foreach(stmt => assert(run(server, stmt)._3.at("/stats/state").asText()
+        === "FINISHED", stmt))
+    Layout.snapshot(spark, s"demo.$t", "v1")
+    t
+  }
+
+  test("Trino's schema-qualified $snapshots spelling reads the qualified table's commits") {
+    val server = StatementHttp.start(spark)
+    try {
+      val t = committedDemoTable(server)
+      val (_, rows, fin) = run(server,
+        s"""SELECT count(*) AS n, max(record_count) AS r FROM iceberg.demo."$t$$snapshots"""")
+      assert(fin.at("/stats/state").asText() === "FINISHED", fin.toString)
+      assert(rows.size === 1)
+      assert(rows.head(0).asLong() >= 1L)
+      assert(rows.head(1).asLong() === 2L)
+    } finally server.stop()
+  }
+
+  test("Trino's schema-qualified $refs spelling reads the qualified table's refs") {
+    val server = StatementHttp.start(spark)
+    try {
+      val t = committedDemoTable(server)
+      val (_, rows, fin) = run(server,
+        s"""SELECT name, type FROM iceberg.demo."$t$$refs" ORDER BY name""")
+      assert(fin.at("/stats/state").asText() === "FINISHED", fin.toString)
+      assert(rows.map(r => (r(0).asText(), r(1).asText()))
+        === Seq("main" -> "branch", "v1" -> "tag"))
+    } finally server.stop()
+  }
 }

@@ -101,4 +101,15 @@ class DecontaminateSpec extends SparkSpec {
       "doc_id", "text", shingleK = 3)
     assert(flags.filter(col("flagged")).count() === 0L)
   }
+
+  test("a bloom sized past the default conf clamps keeps its size; the shared conf never moves") {
+    val key = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+    val before = spark.conf.getOption(key)
+    // 5M expected shingles at fpp 1e-4 asks for ~96M bits, past the
+    // default 2^26-bit clamp
+    val bf = Decontaminate.buildShingleBloom(test_, "doc_id", "text",
+      shingleK = 3, expectedShingles = 5000000L)
+    assert(bf.length > (1L << 26) / 8 + 1024)
+    assert(spark.conf.getOption(key) === before)
+  }
 }
