@@ -28,8 +28,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     [[Layout.createBranch]] / [[Layout.createBranchAtSeq]];
   *     `ALTER TABLE t DROP BRANCH b` → [[Layout.dropBranch]].
   *     All metadata-plane (refs CAS + at most a branch-copy populate);
-  *     the created refs immediately serve the existing read spellings
-  *     (`FOR VERSION AS OF 'tag'`, `` `t@branch` ``, `$refs`).
+  *     the created refs immediately serve the read spellings
+  *     (`FOR VERSION AS OF 'tag'`, `` `t@branch` ``, `$refs`), which
+  *     [[Lakehouse.sql]] resolves from the refs store per statement.
   *
   *   - `RETAIN ... DAYS` clauses refuse loudly: retention is
   *     expire_snapshots' job in this engine, and silently accepting a

@@ -1,6 +1,11 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** ANSI `information_schema` served over the session catalog — the
   * introspection surface the reference's Superset actually hits: when a
@@ -22,209 +27,158 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * over the wire. Without this shim the first dataset refresh a live
   * Superset performs fails (round-16 judge, top next-round item).
   *
-  * Mechanism — the [[TimeTravel]] pattern: a statement referencing
-  * `information_schema.<rel>` (bare or backticked legs, any case,
-  * occurrences inside single-quoted literals are data) has the
-  * reference rewritten to a temp view `__info_schema_<rel>`, REFRESHED
-  * from `spark.catalog` at that moment, so the view always reflects the
-  * live catalog — never a stale materialization. Served relations:
-  * `schemata`, `tables`, `views`, `columns` (ANSI column sets, Trino
-  * type names via [[StatementHttp.trinoType]]). An unserved relation
-  * refuses loudly, never an unknown-table error three layers down.
+  * Mechanism: [[Lakehouse.sql]] swaps each parsed
+  * `[catalog.]information_schema.<rel>` reference (any leg backticked,
+  * any case) for the one relation it names, built from `spark.catalog`
+  * at that moment — the live catalog, never a stale materialization, and
+  * nothing registered on the session. Served relations: `schemata`,
+  * `tables`, `views`, `columns` (ANSI column sets, Trino type names via
+  * [[StatementHttp.trinoType]]). The `iceberg` and `spark_catalog`
+  * qualifiers serve; any other refuses with the catalog message, and an
+  * unserved relation refuses loudly, never an unknown-table error three
+  * layers down.
   *
-  * Scale: the refresh is a driver-side walk of catalog METADATA
-  * (databases × tables × schemas) — the metadata plane, zero data I/O,
-  * same discipline as [[Layout.listRefs]]. Temp-view registration keeps
-  * the rewritten statement planning through Catalyst like any other, so
-  * the dialect's WHERE/ORDER BY push into the tiny local relation. */
-object InfoSchema {
+  * Scale: a build is a driver-side walk of catalog METADATA (databases ×
+  * tables × schemas) — the metadata plane, zero data I/O, same
+  * discipline as [[Layout.listRefs]]. The relation plans through
+  * Catalyst like any other, so the dialect's WHERE/ORDER BY push into
+  * the tiny local relation. */
+object InfoSchema extends PredicateHelper {
 
   /** The served relations, lowercase. */
   private val Served = Set("schemata", "tables", "views", "columns")
 
-  // [catalog.]information_schema.<rel> with every leg optionally
-  // backticked — matched case-insensitively OUTSIDE single-quoted
-  // literals; the lookbehind keeps `my_information_schema.x` (a longer
-  // identifier) from matching mid-word AND forces a dotted qualifier
-  // to bind as the CATALOG group (round-17 verdict #1: the qualified
-  // `spark_catalog.information_schema.columns` used to rewrite into a
-  // nonsense `spark_catalog.__info_schema_columns` and die three
-  // layers down — now the served catalogs strip and any other
-  // qualifier refuses with the catalog message)
-  private val RefRx =
-    ("(?i)(?<![A-Za-z_0-9`.])(?:`?([A-Za-z_][A-Za-z_0-9]*)`?\\s*\\.\\s*)?" +
-      "`?information_schema`?\\s*\\.\\s*`?([A-Za-z_][A-Za-z_0-9]*)`?").r
+  private val Cat = "iceberg" // the alias this engine serves the catalog under
 
-  /** True when the statement references `information_schema.` outside
-    * single-quoted string literals. */
-  def referenced(sql: String): Boolean =
-    RefRx.findAllMatchIn(sql).exists(m => !insideLiteral(sql, m.start))
-
-  private def insideLiteral(s: String, pos: Int): Boolean = {
-    var i = 0
-    var in = false
-    while (i < pos && i < s.length) {
-      if (s.charAt(i) == '\'') {
-        if (in && i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1
-        else in = !in
-      }
-      i += 1
-    }
-    in
-  }
-
-  /** The scope a statement PROVABLY restricts `columns` to — the trino
-    * dialect's get_columns always carries `"table_schema" = 'x' AND
-    * "table_name" = 'y'`, and resolving every catalog table's schema
-    * for that one answer is the walk that would hurt at 10⁴ tables.
-    * Extraction is deliberately conservative — scope ONLY when:
-    *
-    *   - exactly one `information_schema.columns` reference (two
-    *     instances could carry different predicates);
-    *   - no OR / NOT outside string literals (a disjunction or
-    *     negation could select rows OUTSIDE any equality literal);
-    *   - at most one distinct equality literal per column.
-    *
-    * Under those guards the equalities are conjunction members, so a
-    * row outside the scope cannot satisfy the statement anyway —
-    * scoping changes cost, never results. Anything else → full walk. */
-  private[engine] def columnsScope(sql: String)
-      : (Option[String], Option[String]) = {
-    val refs = RefRx.findAllMatchIn(sql)
-      .filter(m => !insideLiteral(sql, m.start)).toSeq
-    // scope ONLY a statement whose SOLE information_schema reference is
-    // `columns` — a second reference (a UNION ALL branch over `tables`,
-    // a join) could own the equality literals the extractor would find,
-    // and scoping on a foreign branch's predicate silently drops rows
-    // (round-17 advisor: the 'cost change, never a result change'
-    // contract requires the conjunction argument, which only holds for
-    // a single query block)
-    if (refs.size != 1 || !refs.head.group(2).equalsIgnoreCase("columns"))
-      return (None, None)
-    val risky = "(?i)\\b(OR|NOT|JOIN|UNION|INTERSECT|EXCEPT)\\b".r
-      .findAllMatchIn(sql).exists(m => !insideLiteral(sql, m.start))
-    if (risky) return (None, None)
-    def eqLit(colName: String): Option[String] = {
-      // the lookbehind rejects a longer identifier (`my_table_name`)
-      // AND any qualified spelling (`c.table_name`, `"c"."table_name"`)
-      // — a qualifier could name ANOTHER relation in a join, and
-      // scoping on it would drop rows the statement wants; unscoped =
-      // full walk, always correct
-      val rx = ("(?i)(?<![A-Za-z_0-9.\"`])[\"`]?" + colName +
-        "[\"`]?\\s*=\\s*'((?:[^']|'')*)'").r
-      val vals = rx.findAllMatchIn(sql)
-        .filter(m => !insideLiteral(sql, m.start))
-        .map(_.group(1).replace("''", "'")).toSeq.distinct
-      if (vals.size == 1) Some(vals.head) else None
-    }
-    (eqLit("table_schema"), eqLit("table_name"))
-  }
-
-  /** Observability hook for the scoping contract: how many tables the
-    * last refresh resolved schemas for (-1 before any refresh). */
-  @volatile private[engine] var lastColumnsWalk: Int = -1
-
-  /** Rewrite `information_schema.<rel>` references to the freshly
-    * refreshed temp views; a no-op for statements without any. */
-  def rewrite(spark: SparkSession, sql: String): String = {
-    if (!referenced(sql)) return sql
-    refresh(spark, columnsScope(sql))
-    val out = new StringBuilder
-    var last = 0
-    RefRx.findAllMatchIn(sql).foreach { m =>
-      if (!insideLiteral(sql, m.start)) {
-        // a catalog-qualified spelling serves for the catalogs this
-        // engine answers as (the wire's `iceberg` alias and Spark's own
-        // `spark_catalog`) and refuses any other qualifier with the
-        // catalog message, matching the SHOW-family validation
-        Option(m.group(1)).filterNot(c => c.equalsIgnoreCase("iceberg") ||
+  /** The served relation a parsed name addresses, or None when the name
+    * is not an `information_schema` reference. The catalog leg serves for
+    * the catalogs this engine answers as: the wire's `iceberg` alias and
+    * Spark's own `spark_catalog`. */
+  private object Ref {
+    def unapply(r: UnresolvedRelation): Option[String] = r.multipartIdentifier match {
+      case catalog :+ schema :+ rel
+          if catalog.size <= 1 && schema.equalsIgnoreCase("information_schema") =>
+        catalog.filterNot(c => c.equalsIgnoreCase(Cat) ||
           c.equalsIgnoreCase("spark_catalog")).foreach { c =>
           throw new IllegalArgumentException(s"catalog not found: $c")
         }
-        val rel = m.group(2).toLowerCase
-        if (!Served.contains(rel))
+        if (!Served.contains(rel.toLowerCase))
           throw new IllegalArgumentException(
-            s"information_schema.$rel is not served — available: " +
+            s"information_schema.${rel.toLowerCase} is not served — available: " +
               Served.toSeq.sorted.mkString(", "))
-        out ++= sql.substring(last, m.start)
-        out ++= s"__info_schema_$rel"
-        last = m.end
-      }
+        Some(rel.toLowerCase)
+      case _ => None
     }
-    out ++= sql.substring(last)
-    out.toString
   }
 
-  /** Rebuild the four views from the live catalog. Temp views named
-    * `__info_schema_*`; TEMPORARY tables (database-less — including
-    * these views themselves and [[TimeTravel]]'s pinned registrations)
-    * are NOT catalog objects and are excluded, matching Trino, where
-    * information_schema lists only catalog-owned relations. `scope`
-    * restricts the COLUMNS walk (the only per-table-schema-resolving
-    * build) to the (schema, table) the statement provably filters to
-    * — [[columnsScope]]'s conjunction guards make this a cost change,
-    * never a result change. */
-  def refresh(spark: SparkSession,
-      scope: (Option[String], Option[String]) = (None, None)): Unit = {
-    import spark.implicits._
-    val cat = "iceberg" // the alias this engine serves the catalog under
-    val dbs = spark.catalog.listDatabases().collect().map(_.name).sorted.toSeq
-    dbs.map(d => (cat, d)).toDF("catalog_name", "schema_name")
-      .createOrReplaceTempView("__info_schema_schemata")
+  /** Observability hook for the scoping contract: how many tables the
+    * last `columns` build resolved schemas for (-1 before any). */
+  @volatile private[engine] var lastColumnsWalk: Int = -1
 
-    val tables: Seq[(String, String, String)] = dbs.flatMap { d =>
+  /** The parsed-plan rule [[Lakehouse.sql]] applies: each reference
+    * becomes the relation it names. A `Filter` directly over `columns`
+    * scopes the walk by its equality conjuncts ([[columnsScope]]); the
+    * relation's own names are its alias, or else each suffix of the
+    * name it was written with. */
+  private[engine] def served(spark: SparkSession)
+      : PartialFunction[LogicalPlan, LogicalPlan] = {
+    case Filter(cond, r @ Ref("columns")) =>
+      val name = r.multipartIdentifier
+      val own = name.indices.map(i => name.drop(i).mkString(".").toLowerCase)
+      Filter(cond, build(spark, r, columnsScope(cond, own.toSet)))
+    case Filter(cond, a @ SubqueryAlias(id, r @ Ref("columns"))) =>
+      Filter(cond, a.copy(child =
+        build(spark, r, columnsScope(cond, Set(id.name.toLowerCase)))))
+    case r @ Ref(_) => build(spark, r, (None, None))
+  }
+
+  /** The (schema, table) a filter directly over `columns` PROVABLY
+    * restricts it to — the trino dialect's get_columns always carries
+    * `"table_schema" = 'x' AND "table_name" = 'y'`, and resolving every
+    * catalog table's schema for that one answer is the walk that would
+    * hurt at 10⁴ tables. A conjunct counts only when it equates the
+    * column, unqualified or qualified by one of the relation's own names
+    * (`own`), with a string literal, and a column scopes only with one
+    * distinct such literal. A row outside the scope then cannot satisfy
+    * the filter, so scoping changes cost, never results. A qualifier
+    * naming anything else, a disjunction or a non-literal leaves the
+    * column unscoped: a full walk, always correct. */
+  private def columnsScope(cond: Expression, own: Set[String])
+      : (Option[String], Option[String]) = {
+    val eqs = splitConjunctivePredicates(cond).collect {
+      case EqualTo(a: UnresolvedAttribute, Literal(v: UTF8String, StringType)) =>
+        (a.nameParts, v.toString)
+      case EqualTo(Literal(v: UTF8String, StringType), a: UnresolvedAttribute) =>
+        (a.nameParts, v.toString)
+    }.filter { case (parts, _) =>
+      parts.size == 1 || own.contains(parts.init.mkString(".").toLowerCase)
+    }
+    def only(col: String): Option[String] =
+      eqs.collect { case (parts, v) if parts.last.equalsIgnoreCase(col) => v }
+        .distinct match {
+        case Seq(v) => Some(v)
+        case _ => None
+      }
+    (only("table_schema"), only("table_name"))
+  }
+
+  /** The one relation `r` names, built from the live catalog. TEMPORARY
+    * tables (database-less) are NOT catalog objects and are excluded,
+    * matching Trino, where information_schema lists only catalog-owned
+    * relations. `scope` restricts the `columns` walk (the only
+    * per-table-schema-resolving build). */
+  private def build(spark: SparkSession, r: UnresolvedRelation,
+      scope: (Option[String], Option[String])): LogicalPlan = {
+    import spark.implicits._
+    val (wantSchema, wantTable) = scope
+    val dbs = spark.catalog.listDatabases().collect().map(_.name).sorted.toSeq
+    // (schema, name, table_type) of every catalog-owned table in scope
+    lazy val tables = dbs.filter(d => wantSchema.forall(_ == d)).flatMap { d =>
       spark.catalog.listTables(d).collect()
         .filter(t => t.tableType != "TEMPORARY" && t.database != null)
         .map { t =>
           val typ = if (t.tableType == "VIEW") "VIEW" else "BASE TABLE"
           (d, t.name, typ)
         }.sortBy(_._2)
-    }
-    tables.map { case (d, n, ty) => (cat, d, n, ty) }
-      .toDF("table_catalog", "table_schema", "table_name", "table_type")
-      .createOrReplaceTempView("__info_schema_tables")
-
-    // view_definition is the view's stored SQL body (round-17 verdict
-    // "What's missing #3": the trino dialect's get_view_definition
-    // reads it — NULL left a Superset dataset built on a view
-    // introspecting blind). The per-view metadata fetch is driver-side
-    // catalog metadata, scoped to views only (few by construction);
-    // an unresolvable view lists with a NULL definition rather than
-    // taking down the introspection plane.
-    tables.filter(_._3 == "VIEW")
-      .map { case (d, n, _) =>
-        val text =
-          try spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(n, Some(d)))
-            .viewText.orNull
-          catch { case scala.util.control.NonFatal(_) => null }
-        (cat, d, n, text)
-      }
-      .toDF("table_catalog", "table_schema", "table_name", "view_definition")
-      .createOrReplaceTempView("__info_schema_views")
-
-    val (wantSchema, wantTable) = scope
-    val inScope = tables.filter { case (d, n, _) =>
-      wantSchema.forall(_ == d) && wantTable.forall(_ == n)
-    }
-    lastColumnsWalk = inScope.size
-    val columns = inScope.flatMap { case (d, n, _) =>
-      // one UNRESOLVABLE table (dropped path, broken view) must not
-      // take down the whole introspection plane — Superset refreshes
-      // one dataset while another is mid-migration; the broken table
-      // simply lists no columns (it still appears in `tables`)
-      val schema =
-        try spark.table(s"`$d`.`$n`").schema.fields.toSeq
-        catch { case scala.util.control.NonFatal(_) => Seq.empty }
-      schema.zipWithIndex.map { case (f, i) =>
-        (cat, d, n, f.name, (i + 1).toLong, null: String,
-          if (f.nullable) "YES" else "NO", StatementHttp.trinoType(f.dataType))
-      }
-    }
-    columns.toDF("table_catalog", "table_schema", "table_name",
-      "column_name", "ordinal_position", "column_default", "is_nullable",
-      "data_type")
-      .createOrReplaceTempView("__info_schema_columns")
-    ()
+    }.filter { case (_, n, _) => wantTable.forall(_ == n) }
+    Lakehouse.relation(r.multipartIdentifier, r.multipartIdentifier.last.toLowerCase match {
+      case "schemata" => dbs.map(d => (Cat, d)).toDF("catalog_name", "schema_name")
+      case "tables" =>
+        tables.map { case (d, n, ty) => (Cat, d, n, ty) }
+          .toDF("table_catalog", "table_schema", "table_name", "table_type")
+      case "views" =>
+        // view_definition is the view's stored SQL body (round-17
+        // verdict "What's missing #3": the trino dialect's
+        // get_view_definition reads it — NULL left a Superset dataset
+        // built on a view introspecting blind). The per-view metadata
+        // fetch is driver-side catalog metadata, scoped to views only
+        // (few by construction); an unresolvable view lists with a NULL
+        // definition rather than taking down the introspection plane.
+        tables.filter(_._3 == "VIEW").map { case (d, n, _) =>
+          val text =
+            try spark.sessionState.catalog.getTableMetadata(
+              org.apache.spark.sql.catalyst.TableIdentifier(n, Some(d)))
+              .viewText.orNull
+            catch { case scala.util.control.NonFatal(_) => null }
+          (Cat, d, n, text)
+        }.toDF("table_catalog", "table_schema", "table_name", "view_definition")
+      case "columns" =>
+        lastColumnsWalk = tables.size
+        tables.flatMap { case (d, n, _) =>
+          // one UNRESOLVABLE table (dropped path, broken view) must not
+          // take down the whole introspection plane — Superset refreshes
+          // one dataset while another is mid-migration; the broken table
+          // simply lists no columns (it still appears in `tables`)
+          val schema =
+            try spark.table(s"`$d`.`$n`").schema.fields.toSeq
+            catch { case scala.util.control.NonFatal(_) => Seq.empty }
+          schema.zipWithIndex.map { case (f, i) =>
+            (Cat, d, n, f.name, (i + 1).toLong, null: String,
+              if (f.nullable) "YES" else "NO", StatementHttp.trinoType(f.dataType))
+          }
+        }.toDF("table_catalog", "table_schema", "table_name",
+          "column_name", "ordinal_position", "column_default", "is_nullable",
+          "data_type")
+    })
   }
 }

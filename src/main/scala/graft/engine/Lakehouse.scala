@@ -1,6 +1,9 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement, LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.execution.command.ExplainCommand
+import org.apache.spark.sql.graft.ParsedSql
 
 /** Catalog/DDL surface — the Spark-native stand-in for the reference's
   * Nessie-catalog + MinIO-warehouse tier (SURVEY.md §1.1, §2.1 S2-S8):
@@ -12,10 +15,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `INSERT INTO ... VALUES` (README.md:62)              → plain spark.sql
   *   - `INSERT INTO ... SELECT` (seed.sh:75...)             → plain spark.sql
   *
-  * Everything routes through `spark.sql` so the exercised surface is the
-  * real SQL parser/analyzer path, not a private API. Catalog versioning
-  * (Nessie ref `main`) is out of scope — no Iceberg runtime jar (SURVEY.md
-  * §7.3.7).
+  * Everything routes through Spark's own SQL parser and analyzer, not a
+  * private API. Catalog versioning (the reference's Nessie refs) is served
+  * by the engine itself: [[Layout]] keeps tags and branches in the
+  * manifest store and [[NessieHttp]] answers the Nessie REST verbs over
+  * them.
   */
 object Lakehouse {
 
@@ -50,32 +54,62 @@ object Lakehouse {
     spark.sql(s"DROP TABLE IF EXISTS $fqName")
 
   /** Ad-hoc SQL entry point (README.md:49-50, §3.3) — the full statement
-    * surface is whatever Spark SQL parses, plus the ref-addressed
-    * time-travel spellings ([[TimeTravel.rewrite]]: `FOR VERSION AS OF
-    * 'tag'` → [[Layout.readAt]], `"table@branch"` → the branch fork),
-    * the live-catalog `information_schema` shim ([[InfoSchema.rewrite]]
-    * — the Superset dataset-refresh introspection path), the CDC /
-    * maintenance verbs ([[TableFunctions.rewrite]]:
-    * `TABLE(system.table_changes(...))` → the changelog scan;
-    * `ALTER TABLE ... EXECUTE expire_snapshots(...)` →
-    * [[Layout.expireSnapshots]]), the Iceberg metadata tables
-    * ([[MetaSql.rewrite]]: `` `t$snapshots` `` / `$history` /
-    * `$refs` / `$files` answered from the manifest store), and
-    * `MERGE INTO` ([[MergeSql]]) and row-level `DELETE FROM` /
-    * `UPDATE ... SET` ([[DmlSql]]) — Spark's v1 parquet catalog refuses
-    * all three natively; the rewrites land them on the Layout commit
-    * machinery. */
+    * surface is whatever Spark SQL parses, plus the engine's own spellings.
+    *
+    * Statement routers run first, for the commands Spark's v1 parquet
+    * catalog refuses natively: `MERGE INTO` ([[MergeSql]]), row-level
+    * `DELETE FROM` / `UPDATE ... SET` ([[DmlSql]]), the maintenance verbs
+    * `ALTER TABLE ... EXECUTE` / `CALL system.*` ([[TableFunctions]]),
+    * tag and branch DDL ([[AlterSql]]) and `SHOW STATS` ([[ShowStats]]).
+    *
+    * Every other statement is parsed once by the session's parser, and the
+    * engine's relations are swapped into the parsed plan before analysis,
+    * each as a `SubqueryAlias` over the plan its builder returns:
+    *   - `information_schema.<rel>` — the live-catalog introspection
+    *     relations Superset reads ([[InfoSchema]]);
+    *   - `` `t$snapshots` `` and the other Iceberg metadata tables
+    *     ([[MetaSql]]);
+    *   - `FOR VERSION AS OF` / `FOR TIMESTAMP AS OF` and `` `t@branch` ``
+    *     ([[TimeTravel]]);
+    *   - `TABLE(system.table_changes(...))` ([[TableFunctions]]).
+    * Spark's parser owns quoting, so a spelling inside a literal stays
+    * data. Nothing is registered on the session: concurrent statements
+    * share no per-statement state. The swap reaches scalar and `IN`
+    * subqueries, CTE definitions, the statement under `EXPLAIN` and an
+    * `INSERT`'s target (`` INSERT INTO `t@branch` `` writes the branch). */
   def sql(spark: SparkSession, text: String): DataFrame =
     MergeSql.maybeExecute(spark, text)
       .orElse(DmlSql.maybeExecute(spark, text))
       .orElse(TableFunctions.maybeExecute(spark, text))
       .orElse(AlterSql.maybeExecute(spark, text))
       .orElse(ShowStats.maybeExecute(spark, text))
-      .getOrElse {
-        spark.sql(TimeTravel.rewrite(spark,
-          MetaSql.rewrite(spark,
-            TableFunctions.rewrite(spark, InfoSchema.rewrite(spark, text)))))
-      }
+      .getOrElse(ParsedSql.run(spark, text)(withRelations(spark)))
+
+  /** The parsed plan with the engine's relations swapped in. */
+  private def withRelations(spark: SparkSession)(plan: LogicalPlan): LogicalPlan = {
+    val served = InfoSchema.served(spark)
+      .orElse(MetaSql.served(spark))
+      .orElse(TimeTravel.served(spark))
+      .orElse(TableFunctions.served(spark))
+    // EXPLAIN holds its statement as a field, INSERT its target and WITH
+    // its CTE definitions beside the child: a child transform reaches none
+    def swap(p: LogicalPlan): LogicalPlan = p.transformDownWithSubqueries(
+      served.orElse {
+        case e: ExplainCommand => e.copy(logicalPlan = swap(e.logicalPlan))
+        case i: InsertIntoStatement => i.copy(table = swap(i.table))
+        case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+          case (name, body, depth) =>
+            (name, swap(body).asInstanceOf[SubqueryAlias], depth)
+        })
+      })
+    swap(plan)
+  }
+
+  /** One engine relation: `df`'s plan under `name`, so the statement can
+    * qualify its columns by the name it wrote. Each call is one
+    * occurrence, with attributes of its own. */
+  private[engine] def relation(name: Seq[String], df: DataFrame): LogicalPlan =
+    SubqueryAlias(name, df.queryExecution.analyzed)
 
   /** Result delivery as CSV-with-header — the Trino-CLI `--output-format
     * CSV` shape (seed.sh:9, S12). Distributed write; callers coalesce(1)

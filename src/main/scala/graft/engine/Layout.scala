@@ -757,7 +757,9 @@ object Layout {
   // On conflict the merge refuses; re-fork and replay (rebase) is the
   // caller's move, exactly like a rejected Nessie commit.
 
-  private def branchTableName(table: String, branch: String) =
+  /** The catalog table a branch's work reads and writes — the one
+    * spelling of `<table>__branch_<branch>`. */
+  private[engine] def branchTableName(table: String, branch: String) =
     s"${table}__branch_$branch"
   private def forkTag(branch: String) = s"__fork_$branch"
 
@@ -1062,8 +1064,11 @@ object Layout {
   def listRefs(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     val refs = Manifests.loadRefs(Manifests.root(spark, table))
-    val branchPrefix = s"${table}__branch_"
-    val branches = spark.catalog.listTables()
+    // branch tables live in the table's own database, under its leaf name
+    val parts = table.split('.')
+    val branchPrefix = branchTableName(parts.last, "")
+    val branches = spark.catalog.listTables(
+      parts.dropRight(1).lastOption.getOrElse(spark.catalog.currentDatabase))
       .collect().map(_.name).filter(_.startsWith(branchPrefix))
       .map(_.stripPrefix(branchPrefix)).toSeq.sorted
       .map(b => (b, "branch", refs.tags.getOrElse(forkTag(b), -1L)))

@@ -7,9 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * tier implies) landed on the [[Layout]] commit machinery. Spark's v1
   * parquet catalog refuses MERGE natively ("MERGE INTO TABLE is not
   * supported temporarily"), so the statement is parsed here and
-  * EXECUTED as one declarative plan + one copy-on-write commit —
-  * the [[TimeTravel]]/[[TableFunctions]] rewrite discipline, applied to
-  * a whole command.
+  * EXECUTED as one declarative plan + one copy-on-write commit — one of
+  * [[Lakehouse.sql]]'s statement routers, which run before Spark's
+  * parser sees the text.
   *
   * Supported shape (the standard's core; at most one UPDATE, one
   * DELETE, one NOT MATCHED clause, evaluated in TEXTUAL order like the

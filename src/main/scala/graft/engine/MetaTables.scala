@@ -84,21 +84,6 @@ object MetaTables {
     }.toDF("tag", "file_count", "record_count", "total_bytes")
   }
 
-  /** Per-file manifest rows for a TAG — the `$files` view of a snapshot,
-    * answered from the manifest alone (no filesystem access): (file,
-    * record_count, file_size_bytes, lower_bounds, upper_bounds). */
-  def filesMetadataAt(spark: SparkSession, table: String,
-      tag: String): DataFrame = {
-    import spark.implicits._
-    val root = Manifests.root(spark, table)
-    val refs = Manifests.loadRefs(root)
-    require(refs.tags.contains(tag), s"unknown snapshot tag '$tag' for $table")
-    Manifests.loadSnapshot(root, refs.tags(tag)).files
-      .map(f => (f.path, f.records, f.bytes, f.lower, f.upper))
-      .toDF("file", "record_count", "file_size_bytes",
-        "lower_bounds", "upper_bounds")
-  }
-
   /** Per-file column BOUNDS — the min/max half of Iceberg's manifest
     * `lower_bounds`/`upper_bounds`, read from parquet footer statistics
     * (merged across row groups), distributed like [[filesMetadata]].

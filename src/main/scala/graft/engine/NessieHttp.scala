@@ -201,9 +201,9 @@ object NessieHttp {
   }
 
   /** The table a ref's commits land on: main = the table itself; any
-    * other branch = its branch table (same naming as [[Layout]]). */
+    * other branch = its branch table ([[Layout.branchTableName]]). */
   private def refTable(table: String, ref: String): String =
-    if (ref == "main") table else s"${table}__branch_$ref"
+    if (ref == "main") table else Layout.branchTableName(table, ref)
 
   /** `POST /trees/{branch}/history/commit`: the Nessie commit contract
     * lowered to [[Manifests.commit]]. Operations carry metadata pointers

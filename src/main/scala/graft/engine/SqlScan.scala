@@ -2,7 +2,7 @@ package graft.engine
 
 /** Quote-, paren- and CASE-aware scanning over SQL statement text —
   * the shared lexical substrate of the hand-rolled statement routers
-  * ([[MergeSql]], [[DmlSql]], [[TableFunctions]]). No full grammar:
+  * ([[MergeSql]], [[DmlSql]]). No full grammar:
   * expressions pass through verbatim to Spark's parser, which owns
   * their semantics; these helpers only find STRUCTURAL positions
   * (clause keywords, top-level commas, balanced parens) without being

@@ -1,6 +1,11 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedFunction, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, NamedArgumentExpression}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL spellings for the table-maintenance and CDC machinery the engine
   * already owns as APIs — the round-16 judge's "same API-only gap time
@@ -8,27 +13,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *   - `SELECT ... FROM TABLE(system.table_changes('demo', 't',
   *     <from_seq>, <to_seq>))` — the Iceberg CDC table function (named
-  *     `arg => value` spellings accepted); resolved through
-  *     [[Layout.changelog]] and substituted as a temp view, so the rest
-  *     of the statement plans over the change feed like any relation
-  *     (the [[TimeTravel]] pattern).
+  *     `arg => value` spellings accepted); [[Lakehouse.sql]] swaps the
+  *     parsed call for [[Layout.changelog]]'s relation, so the rest of
+  *     the statement plans over the change feed like any relation.
   *   - `ALTER TABLE t EXECUTE expire_snapshots(retention_threshold =>
   *     '7d')` — retention maintenance → [[Layout.expireSnapshotsOlderThan]].
   *   - `ALTER TABLE t EXECUTE optimize(file_size_threshold => '100MB')`
   *     — small-file compaction → [[Layout.compactToFileSize]].
   *
-  * All matching is quote-aware (spellings inside single-quoted string
-  * literals are data) and strict: unknown EXECUTE procedures, unparseable
+  * All matching is strict: unknown EXECUTE procedures, unparseable
   * durations/sizes, and uncommitted or expired snapshot bounds refuse
   * loudly — never a silent pass-through that dies three layers down. */
 object TableFunctions {
-
-  // TABLE( system.table_changes( ... ) ) — the argument list is parsed
-  // separately so Trino's named `name => value` form binds BY NAME in
-  // any order (round-17 advisor: the old regex accepted names but bound
-  // positionally, so `table => 't', schema => 'demo'` silently swapped)
-  private val ChangesRx =
-    "(?i)TABLE\\s*\\(\\s*system\\s*\\.\\s*table_changes\\s*\\(([^()]*)\\)\\s*\\)".r
 
   private val ChangesSlots =
     Array("schema_name", "table_name", "start_snapshot_id", "end_snapshot_id")
@@ -37,49 +33,57 @@ object TableFunctions {
     "table_name" -> 1, "table" -> 1,
     "start_snapshot_id" -> 2, "end_snapshot_id" -> 3)
 
-  /** Bind a table_changes argument list — positional, named (any
-    * order), or positional-then-named; duplicate, unknown-name, or
-    * type-mismatched bindings refuse loudly. */
-  private[engine] def bindChangesArgs(argText: String)
+  /** Bind a parsed table_changes argument list — positional, named
+    * (`name => value`, BY NAME in any order), or positional-then-named;
+    * duplicate, unknown-name, or type-mismatched bindings refuse
+    * loudly. */
+  private def bindChangesArgs(args: Seq[Expression])
       : (String, String, Long, Long) = {
-    val parts = SqlScan.splitTop(argText)
-    require(parts.size == 4,
+    require(args.size == 4,
       s"table_changes takes 4 arguments (${ChangesSlots.mkString(", ")}), " +
-        s"got ${parts.size}")
-    val ArgRx = "(?is)^(?:([A-Za-z_]+)\\s*=>\\s*)?('(?:[^']|'')*'|\\d+)$".r
-    val filled = new Array[String](4)
+        s"got ${args.size}")
+    val filled = new Array[Expression](4)
     var seenNamed = false
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val m = ArgRx.findFirstMatchIn(p.trim).getOrElse(
-        throw new IllegalArgumentException(
-          s"cannot parse table_changes argument: $p"))
-      val slot = Option(m.group(1)) match {
-        case Some(n) =>
+    args.zipWithIndex.foreach { case (a, i) =>
+      val (slot, value) = a match {
+        case NamedArgumentExpression(n, v) =>
           seenNamed = true
-          ChangesAliases.getOrElse(n.toLowerCase,
+          (ChangesAliases.getOrElse(n.toLowerCase,
             throw new IllegalArgumentException(
               s"unknown table_changes argument name: $n — expected " +
-                ChangesSlots.mkString(", ")))
-        case None =>
+                ChangesSlots.mkString(", "))), v)
+        case v =>
           require(!seenNamed,
             "positional table_changes arguments cannot follow named ones")
-          i
+          (i, v)
       }
       require(filled(slot) == null,
         s"duplicate table_changes argument: ${ChangesSlots(slot)}")
-      filled(slot) = m.group(2)
+      filled(slot) = value
     }
-    def str(i: Int): String = {
-      require(filled(i).startsWith("'"),
-        s"table_changes ${ChangesSlots(i)} must be a string literal")
-      filled(i).stripPrefix("'").stripSuffix("'").replace("''", "'")
+    def refuse(i: Int, want: String) = throw new IllegalArgumentException(
+      s"table_changes ${ChangesSlots(i)} must be a $want")
+    def str(i: Int): String = filled(i) match {
+      case Literal(v: UTF8String, StringType) => v.toString
+      case _ => refuse(i, "string literal")
     }
-    def num(i: Int): Long = {
-      require(filled(i).forall(_.isDigit),
-        s"table_changes ${ChangesSlots(i)} must be a snapshot id")
-      filled(i).toLong
+    def num(i: Int): Long = filled(i) match {
+      case Literal(v, IntegerType | LongType) => v.toString.toLong
+      case _ => refuse(i, "snapshot id")
     }
     (str(0), str(1), num(2), num(3))
+  }
+
+  /** The parsed-plan rule [[Lakehouse.sql]] applies:
+    * `TABLE(system.table_changes(...))` becomes the change feed. */
+  private[engine] def served(spark: SparkSession)
+      : PartialFunction[LogicalPlan, LogicalPlan] = {
+    case UnresolvedTableValuedFunction(Seq(t), Seq(f: UnresolvedFunction), _)
+        if t.equalsIgnoreCase("table") &&
+          f.nameParts.map(_.toLowerCase) == Seq("system", "table_changes") =>
+      val (schema, tbl, from, to) = bindChangesArgs(f.arguments)
+      Lakehouse.relation(Seq("table_changes"),
+        Layout.changelog(spark, fqTable(schema, tbl), from, to))
   }
 
   // the table leg accepts the wire's requoted backticked spelling too
@@ -174,48 +178,6 @@ object TableFunctions {
     Layout.overwrite(spark, table, Layout.readAtSeq(spark, table, seq),
       operation = s"rollback:$seq")
     Seq(seq).toDF("rolled_back_to")
-  }
-
-  private def insideLiteral(s: String, pos: Int): Boolean = {
-    var i = 0
-    var in = false
-    while (i < pos && i < s.length) {
-      if (s.charAt(i) == '\'') {
-        if (in && i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1
-        else in = !in
-      }
-      i += 1
-    }
-    in
-  }
-
-  /** Rewrite `TABLE(system.table_changes(...))` references to freshly
-    * registered changelog temp views; a no-op for statements without
-    * any. View names carry an md5 of the exact (table, window) so two
-    * different windows over one table in a statement stay distinct
-    * (the [[TimeTravel.viewName]] discipline). */
-  def rewrite(spark: SparkSession, sql: String): String = {
-    if (!sql.toLowerCase.contains("table_changes")) return sql
-    val out = new StringBuilder
-    var last = 0
-    ChangesRx.findAllMatchIn(sql).foreach { m =>
-      if (m.start >= last && !insideLiteral(sql, m.start)) {
-        val (schema, tbl, from, to) = bindChangesArgs(m.group(1))
-        val table = fqTable(schema, tbl)
-        val key = s"$table $from $to"
-        val h = java.security.MessageDigest.getInstance("MD5")
-          .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          .take(6).map(b => f"$b%02x").mkString
-        val view =
-          s"__tc_${table.replaceAll("[^A-Za-z0-9_]", "_")}_${from}_${to}_$h"
-        Layout.changelog(spark, table, from, to).createOrReplaceTempView(view)
-        out ++= sql.substring(last, m.start)
-        out ++= view
-        last = m.end
-      }
-    }
-    out ++= sql.substring(last)
-    out.toString
   }
 
   /** Execute an `ALTER TABLE ... EXECUTE <procedure>` maintenance

@@ -130,13 +130,25 @@ class InfoSchemaSpec extends SparkSpec {
     assert(both === Seq("a", "b"))
     assert(InfoSchema.lastColumnsWalk > 1, "OR must disable scoping")
     // a QUALIFIED column could name another join relation → no scope
-    assert(InfoSchema.columnsScope(
-      "SELECT * FROM information_schema.columns c JOIN x ON " +
-        "c.table_name = x.n WHERE x.table_name = 'o'") === ((None, None)))
+    spark.sql(s"CREATE TABLE $db.x (n STRING, table_name STRING) USING parquet")
+    spark.sql(s"INSERT INTO $db.x VALUES ('one', 'o')")
+    val joined = Lakehouse.sql(spark,
+      s"""SELECT c.column_name FROM information_schema.columns c
+         |JOIN $db.x x ON c.table_name = x.n
+         |WHERE x.table_name = 'o' AND c.table_schema = '$db'""".stripMargin)
+      .as[String].collect().toSeq
+    assert(joined === Seq("a"))
+    assert(InfoSchema.lastColumnsWalk > 1,
+      "a join-side qualified column must not scope the walk")
     // a longer identifier is not the scoping column
-    assert(InfoSchema.columnsScope(
-      "SELECT * FROM information_schema.columns WHERE my_table_name = 'z'")
-      === ((None, None)))
+    val longer = Lakehouse.sql(spark,
+      s"""SELECT column_name FROM (SELECT *, table_name AS my_table_name
+         |  FROM information_schema.columns)
+         |WHERE my_table_name = 'one' AND table_schema = '$db'""".stripMargin)
+      .as[String].collect().toSeq
+    assert(longer === Seq("a"))
+    assert(InfoSchema.lastColumnsWalk > 1,
+      "my_table_name must not scope the walk")
     spark.sql(s"DROP DATABASE $db CASCADE")
   }
 
@@ -215,9 +227,13 @@ class InfoSchemaSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("not served"))
     val lit = "SELECT 'see information_schema.columns' AS s"
-    assert(InfoSchema.rewrite(spark, lit) === lit)
-    // a longer identifier containing the name is NOT a reference
-    val other = "SELECT * FROM my_information_schema.columns"
-    assert(InfoSchema.rewrite(spark, other) === other)
+    assert(Lakehouse.sql(spark, lit).collect().head.getString(0) ===
+      "see information_schema.columns")
+    // a longer identifier containing the name is NOT a reference: it
+    // reaches Spark's own resolution as the unknown table it is
+    val other = intercept[org.apache.spark.sql.AnalysisException] {
+      Lakehouse.sql(spark, "SELECT * FROM my_information_schema.columns")
+    }
+    assert(other.getMessage.contains("my_information_schema"))
   }
 }

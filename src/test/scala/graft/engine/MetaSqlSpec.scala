@@ -57,6 +57,19 @@ class MetaSqlSpec extends SparkSpec {
     assert(refs.contains(("h1", "tag")) && refs.contains(("h2", "tag")))
   }
 
+  test("$refs lists the branches of a schema-qualified table") {
+    val db = freshName("ms_refs_")
+    spark.sql(s"CREATE DATABASE $db")
+    Seq((1L, "a")).toDF("id", "v").write.saveAsTable(s"$db.orders")
+    Layout.snapshot(spark, s"$db.orders", "r1")
+    Layout.createBranch(spark, s"$db.orders", "etl")
+    val refs = Lakehouse.sql(spark,
+      s"SELECT name, type FROM $db.`orders$$refs` ORDER BY name")
+      .as[(String, String)].collect().toSeq
+    assert(refs === Seq(("etl", "branch"), ("main", "branch"), ("r1", "tag")))
+    spark.sql(s"DROP DATABASE $db CASCADE")
+  }
+
   test("$files serves the HEAD manifest; totals reconcile with $snapshots") {
     val t = freshName("ms_files_")
     Seq.tabulate(10)(i => (i.toLong, s"v$i")).toDF("id", "v")
@@ -103,7 +116,8 @@ class MetaSqlSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("not served"))
     val lit = "SELECT 'see `t$snapshots` here' AS s"
-    assert(MetaSql.rewrite(spark, lit) === lit)
+    assert(Lakehouse.sql(spark, lit).collect().head.getString(0) ===
+      "see `t$snapshots` here")
   }
 
   test("$manifests reports per-commit added/existing splits; $properties " +

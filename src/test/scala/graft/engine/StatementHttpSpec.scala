@@ -813,4 +813,17 @@ class StatementHttpSpec extends SparkSpec {
         === Seq("main" -> "branch", "v1" -> "tag"))
     } finally server.stop()
   }
+
+  test("Trino's schema-qualified $refs spelling lists the qualified table's branches") {
+    val server = StatementHttp.start(spark)
+    try {
+      val t = committedDemoTable(server)
+      Layout.createBranch(spark, s"demo.$t", "etl")
+      val (_, rows, fin) = run(server,
+        s"""SELECT name, type FROM iceberg.demo."$t$$refs" ORDER BY name""")
+      assert(fin.at("/stats/state").asText() === "FINISHED", fin.toString)
+      assert(rows.map(r => (r(0).asText(), r(1).asText()))
+        === Seq("etl" -> "branch", "main" -> "branch", "v1" -> "tag"))
+    } finally server.stop()
+  }
 }

@@ -123,7 +123,7 @@ class TimeTravelSpec extends SparkSpec {
 
   test("spellings inside string literals are data, not syntax") {
     val s1 = "SELECT 'x FOR VERSION AS OF ''v9''' AS lit1, '`a@b`' AS lit2"
-    assert(TimeTravel.rewrite(spark, s1) === s1)
+    assert(Lakehouse.sql(spark, s1).collect() === spark.sql(s1).collect())
     val got = Lakehouse.sql(spark, s1).collect().head
     assert(got.getString(0) === "x FOR VERSION AS OF 'v9'")
     assert(got.getString(1) === "`a@b`")
@@ -131,7 +131,7 @@ class TimeTravelSpec extends SparkSpec {
     // data too (round-16 review: the single-quote-only walker rewrote
     // it into a branch-table identifier and broke the statement)
     val s2 = "SELECT \"bob@gmail\" AS email"
-    assert(TimeTravel.rewrite(spark, s2) === s2)
+    assert(Lakehouse.sql(spark, s2).collect() === spark.sql(s2).collect())
     assert(Lakehouse.sql(spark, s2).collect().head.getString(0) === "bob@gmail")
   }
 
@@ -160,14 +160,14 @@ class TimeTravelSpec extends SparkSpec {
 
   test("a quoted identifier needing quoting refuses loudly, never a confusing downstream error") {
     // round-16 judge: `my table` FOR VERSION AS OF silently skipped the
-    // rewrite and died in Spark's parser; now the rewrite itself refuses
+    // rewrite and died in Spark's parser; now the router itself refuses
     val e = intercept[IllegalArgumentException] {
-      TimeTravel.rewrite(spark,
+      Lakehouse.sql(spark,
         "SELECT * FROM `my table` FOR VERSION AS OF 'v1'")
     }
     assert(e.getMessage.contains("plain identifiers"))
     val e2 = intercept[IllegalArgumentException] {
-      TimeTravel.rewrite(spark,
+      Lakehouse.sql(spark,
         "SELECT * FROM `t-dash` FOR TIMESTAMP AS OF '1700000000000'")
     }
     assert(e2.getMessage.contains("plain identifiers"))
