@@ -1,6 +1,5 @@
 package graft.engine
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -71,7 +70,7 @@ object NessieHttp {
 
   /** Start serving `table`'s refs on `port` (0 = ephemeral). */
   def start(spark: SparkSession, table: String, port: Int = 0): Server = {
-    val http = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val http = HttpFront.create(port)
     http.createContext("/api/v2/trees", (exchange: HttpExchange) => {
       try route(spark, table, exchange)
       catch {

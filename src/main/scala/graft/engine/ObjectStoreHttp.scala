@@ -1,6 +1,6 @@
 package graft.engine
 
-import java.net.{InetSocketAddress, URI}
+import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Path, Paths}
 
@@ -53,7 +53,7 @@ object ObjectStoreHttp {
   def start(store: ObjectStoreFileIO, port: Int = 0,
       root: Option[Path] = None): Server = {
     val normRoot = root.map(_.toAbsolutePath.normalize)
-    val http = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val http = HttpFront.create(port)
     http.createContext("/", (exchange: HttpExchange) => {
       try route(store, exchange, normRoot)
       catch {

@@ -1,13 +1,19 @@
 package graft.engine
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{CompletableFuture, CountDownLatch, ExecutionException,
+  ExecutorService, Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.locks.ReentrantReadWriteLock
+
+import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.graft.Scoped
+import org.apache.spark.sql.graft.{ParsedSql, Scoped}
 import org.apache.spark.sql.types._
 
 /** The Trino v1 client wire protocol (`POST /v1/statement` + `nextUri`
@@ -24,9 +30,9 @@ import org.apache.spark.sql.types._
   *
   *   - `POST /v1/statement` with the SQL text as the body registers the
   *     query and answers `{id, infoUri, nextUri, stats.state=QUEUED}`.
-  *   - The client GETs `nextUri` until it disappears. The first
-  *     executing GET runs the statement (through [[TrinoSql.toSpark]],
-  *     the dialect mapping layer) and pages the result: every page
+  *   - The statement starts running at registration (through
+  *     [[TrinoSql.toSpark]], the dialect mapping layer). The client GETs
+  *     `nextUri` until it disappears; the GETs page the result: every page
   *     carries `columns` (name + Trino type) and `data` (JSON row
   *     arrays — the CSV-compatible shape seed.sh's `--output-format
   *     CSV` renders), the last page drops `nextUri` and reports
@@ -75,6 +81,37 @@ import org.apache.spark.sql.types._
   *     JDBC driver's parameterized-query loop, stateless server-side
   *     like the rest of the session surface.
   *
+  * Concurrency, as a Trino coordinator runs its clients' queries side
+  * by side:
+  *
+  *   - Two bounded pools of daemon threads, both owned by [[Server]].
+  *     The exchange pool is the HTTP server's executor; it only parses
+  *     requests and writes JSON. The statement pool runs the statements,
+  *     `max(2, defaultParallelism)` at a time. The exchange pool is twice
+  *     as wide, so a thread is left for `/v1/info` and `DELETE` while
+  *     every statement slot is busy.
+  *   - `POST` submits the statement to the statement pool once, as a
+  *     future. A `GET` long-polls that future for up to [[LongPollMs]]:
+  *     a statement done by then is paged at once, otherwise the page
+  *     answers RUNNING with the same `nextUri`, and the client asks again.
+  *     A fast statement still takes one POST and one GET.
+  *   - Writes are exclusive, reads shared: a per-server read/write lock
+  *     is held around execution. A statement takes the shared side only
+  *     when [[ParsedSql.isQuery]] proves it a query. Everything else takes
+  *     the exclusive side: the routers' statements (MERGE, UPDATE, DELETE,
+  *     ALTER, CALL), DDL, INSERT, EXPLAIN and whatever does not parse. A
+  *     copy-on-write commit (DROP, CREATE, commit, `gc`) is not atomic, so
+  *     two overlapping writers would lose an update, and a reader
+  *     overlapping a writer could resolve a table mid-DROP or read files
+  *     `gc` is deleting.
+  *   - Each statement runs under a Spark job group named by its query id.
+  *     `DELETE` of a statement on the shared side cancels that group, and
+  *     a `GET` waiting on it answers FAILED with `USER_CANCELED`. A
+  *     statement on the exclusive side is abandoned but not interrupted:
+  *     it runs to its end, because an interrupted overwrite would leave
+  *     the catalog pointing at an uncommitted directory. A statement
+  *     still queued never starts.
+  *
   * Scale discipline: results are paged (`pageSize` rows per GET), and a
   * statement whose result exceeds `maxRows` FAILS loudly instead of
   * buffering a cluster-sized result on the driver — the wire protocol
@@ -87,34 +124,79 @@ object StatementHttp {
 
   private val mapper = new ObjectMapper()
 
-  final case class Server(http: HttpServer, port: Int) {
-    def stop(): Unit = http.stop(0)
+  /** A running front. [[stop]] stops the HTTP server and shuts down both
+    * pools (`HttpServer.stop` leaves an executor it was given running).
+    * A statement still running is left to finish on its daemon thread. */
+  final class Server private[StatementHttp] (val http: HttpServer, val port: Int,
+      exchanges: ExecutorService, reg: Registry) {
+    def stop(): Unit = {
+      http.stop(0)
+      exchanges.shutdownNow()
+      reg.statements.shutdown()
+    }
     def uri(path: String): String = s"http://127.0.0.1:$port$path"
+    /** How many statements run at once. */
+    private[engine] def statementSlots: Int = reg.slots
+    /** Wait until a `GET` of query `id` has started waiting on it. */
+    private[engine] def awaitPoll(id: String, timeoutMs: Long): Boolean =
+      Option(reg.queries.get(id)).exists(_.polled.await(timeoutMs, TimeUnit.MILLISECONDS))
   }
+
+  /** A finished statement: its rows, and the protocol's response headers
+    * a session verb answers with. */
+  private final case class Answer(rows: Array[Row], schema: StructType,
+      headers: Seq[(String, String)] = Nil)
+
+  /** The one-row `true` answer of the session verbs. */
+  private def ok(headers: (String, String)*): Answer =
+    Answer(Array(Row(true)), StructType(Seq(StructField("result", BooleanType))),
+      headers)
+
+  /** What a GET waiting on a canceled query answers with. */
+  private final class Canceled extends RuntimeException("Query was canceled")
 
   private final case class QueryState(id: String, slug: String, sql: String,
       user: String, session: Map[String, String],
       defaultSchema: Option[String],
       prepared: Map[String, String] = Map.empty,
-      timeZone: Option[java.time.ZoneId] = None,
-      var rows: Array[Row] = null, var schema: StructType = null,
-      var failed: Option[Throwable] = None, var done: Boolean = false,
-      var setSession: Option[(String, String)] = None,
-      var resetSession: Option[String] = None,
-      var setSchema: Option[String] = None,
-      var addedPrepare: Option[(String, String)] = None,
-      var deallocatedPrepare: Option[String] = None)
+      timeZone: Option[java.time.ZoneId] = None) {
+    /** Completed once: by the statement's run, or by a DELETE first. */
+    val answer = new CompletableFuture[Answer]()
+    /** Counted down when a GET starts waiting on [[answer]]. */
+    val polled = new CountDownLatch(1)
+    /** Set when the statement runs on the shared side, so a DELETE
+      * knows its jobs may be canceled. */
+    @volatile var shared = false
+    /** Set by [[retire]], under the query's monitor. */
+    var done = false
+  }
 
-  /** Per-server registry: the queries map plus its completed-retention
-    * queue — PAIRED, so eviction order is always the order THIS server
-    * completed them in (a JVM-global queue let one server's retire()
-    * dequeue another server's ids, breaking the bound — round-15
-    * advisor). */
-  private final class Registry {
+  /** Per-server state: the statement pool and the read/write lock its
+    * statements execute under, and the queries map plus its
+    * completed-retention queue — PAIRED, so eviction order is always the
+    * order THIS server completed them in (a JVM-global queue let one
+    * server's retire() dequeue another server's ids, breaking the bound —
+    * round-15 advisor). */
+  private final class Registry(val slots: Int) {
+    val statements: ExecutorService = daemonPool("graft-statement", slots)
+    val rw = new ReentrantReadWriteLock(true)
     val queries = new java.util.concurrent.ConcurrentHashMap[String, QueryState]()
     val completed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val counter = new java.util.concurrent.atomic.AtomicLong(0L)
   }
+
+  private def daemonPool(name: String, width: Int): ExecutorService = {
+    val n = new AtomicInteger(0)
+    Executors.newFixedThreadPool(width, (r: Runnable) => {
+      val t = new Thread(r, s"$name-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+  }
+
+  /** How long a GET waits for its statement before it answers RUNNING:
+    * Trino's own long-poll bound. */
+  private val LongPollMs = 1000L
 
   /** Mark a query completed (idempotent — a RETRIED final-page GET must
     * not re-enqueue it); evict the oldest completed entries past the
@@ -138,13 +220,15 @@ object StatementHttp {
 
   def start(spark: SparkSession, port: Int = 0, pageSize: Int = 1000,
       maxRows: Int = 1000000): Server = {
-    val reg = new Registry
-    val http = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val reg = new Registry(math.max(2, spark.sparkContext.defaultParallelism))
+    val exchanges = daemonPool("graft-wire", 2 * reg.slots)
+    val http = HttpFront.create(port)
+    http.setExecutor(exchanges)
     http.createContext("/v1/statement", (exchange: HttpExchange) => {
       try route(spark, exchange, reg, http.getAddress.getPort,
         pageSize, maxRows)
       catch {
-        case scala.util.control.NonFatal(e) =>
+        case NonFatal(e) =>
           val n = mapper.createObjectNode()
           n.put("message", s"${e.getClass.getSimpleName}: ${e.getMessage}")
           send(exchange, 500, mapper.writeValueAsString(n))
@@ -166,7 +250,7 @@ object StatementHttp {
       send(exchange, 200, mapper.writeValueAsString(n))
     })
     http.start()
-    Server(http, http.getAddress.getPort)
+    new Server(http, http.getAddress.getPort, exchanges, reg)
   }
 
   private val ExecPath = "/v1/statement/executing/([^/]+)/([^/]+)/(\\d+)".r
@@ -315,9 +399,12 @@ object StatementHttp {
         }
         val id = f"graft_${System.currentTimeMillis()}%d_${reg.counter.incrementAndGet()}%05d"
         val slug = java.util.UUID.randomUUID().toString.take(8)
-        reg.queries.put(id,
-          QueryState(id, slug, sql, user, session, defaultSchema, prepared,
-            timeZone))
+        val q = QueryState(id, slug, sql, user, session, defaultSchema,
+          prepared, timeZone)
+        reg.queries.put(id, q)
+        // submitted once, here: a GET only waits on the answer, so a
+        // retried GET can never run the statement twice
+        reg.statements.execute(() => execute(spark, q, reg, maxRows))
         val n = mapper.createObjectNode()
         n.put("id", id)
         n.put("infoUri", s"http://127.0.0.1:$port/ui/query/$id")
@@ -329,32 +416,30 @@ object StatementHttp {
         if (q == null || q.slug != slug) {
           sendErr(exchange, 404, s"query not found: $id"); return
         }
-        val body = page(spark, q, tokenStr.toLong, port, pageSize, maxRows, reg)
+        q.polled.countDown()
+        val outcome: Option[Try[Answer]] =
+          try Some(Success(q.answer.get(LongPollMs, TimeUnit.MILLISECONDS)))
+          catch {
+            case _: TimeoutException => None
+            case e: ExecutionException => Some(Failure(e.getCause))
+          }
         // session verbs answer via the protocol's response headers — the
         // client accumulates them into its X-Trino-Session echo
-        q.setSession.foreach { case (k, v) =>
-          exchange.getResponseHeaders.set("X-Trino-Set-Session",
-            k + "=" + java.net.URLEncoder.encode(v, "UTF-8"))
-        }
-        q.resetSession.foreach(k =>
-          exchange.getResponseHeaders.set("X-Trino-Reset-Session", k))
-        q.setSchema.foreach { sch =>
-          exchange.getResponseHeaders.set("X-Trino-Set-Catalog", "iceberg")
-          exchange.getResponseHeaders.set("X-Trino-Set-Schema", sch)
-        }
-        q.addedPrepare.foreach { case (name, text) =>
-          exchange.getResponseHeaders.set("X-Trino-Added-Prepare",
-            name + "=" + java.net.URLEncoder.encode(text, "UTF-8"))
-        }
-        q.deallocatedPrepare.foreach(name =>
-          exchange.getResponseHeaders.set("X-Trino-Deallocated-Prepare", name))
-        send(exchange, 200, body)
+        outcome.foreach(_.foreach(_.headers.foreach { case (k, v) =>
+          exchange.getResponseHeaders.set(k, v)
+        }))
+        send(exchange, 200, page(q, outcome, tokenStr.toLong, port, pageSize, reg))
       case ("DELETE", ExecPath(id, slug, _)) =>
         val q = reg.queries.get(id)
         if (q == null || q.slug != slug) {
           sendErr(exchange, 404, s"query not found: $id"); return
         }
         reg.queries.remove(id)
+        // a statement not yet started never starts; one reading on the
+        // shared side has its jobs canceled; one on the exclusive side is
+        // left to finish (see the header)
+        if (q.answer.completeExceptionally(new Canceled) && q.shared)
+          spark.sparkContext.cancelJobGroupAndFutureJobs(q.id, "canceled by its client")
         exchange.sendResponseHeaders(204, -1)
         exchange.close()
       case _ => sendErr(exchange, 404, "no route")
@@ -385,9 +470,11 @@ object StatementHttp {
     * statement's bound text) under its client's session state: the
     * statement's conf overrides and echoed schema apply through
     * [[Scoped.run]], on a cloned session when there is anything to
-    * change and on the shared one otherwise. */
+    * change and on the shared one otherwise. Execution holds the shared
+    * side of the server's lock when [[ParsedSql.isQuery]] proves the
+    * mapped text a query, and the exclusive side otherwise. */
   private def runStatement(spark: SparkSession, q: QueryState,
-      sqlText: String, maxRows: Int): Unit = {
+      sqlText: String, reg: Registry, maxRows: Int): Answer = {
     val mapped = TrinoSql.toSpark(sqlText)
     // backstop for the session-mutation class: a USE spelling the
     // dedicated handler did not recognize must REFUSE here — passed
@@ -421,136 +508,150 @@ object StatementHttp {
           df.filter(org.apache.spark.sql.functions.col("Name").like(p))
         case None => df
       }
-      q.rows = filtered.collect()
-      q.schema = filtered.schema
-      return
+      return Answer(filtered.collect(), filtered.schema)
     }
-    Scoped.run(spark, sessionConfs(q.session), q.defaultSchema) { session =>
-      val df = Lakehouse.sql(session, mapped)
-      val collected = df.limit(maxRows + 1).collect()
-      if (collected.length > maxRows)
-        throw new IllegalStateException(
-          s"result exceeds the wire-protocol bound ($maxRows rows) — " +
-            "use the CSV delivery plane for bulk results")
-      q.rows = collected
-      q.schema = df.schema
+    val shared = ParsedSql.isQuery(spark, mapped)
+    val lock = if (shared) reg.rw.readLock() else reg.rw.writeLock()
+    lock.lock()
+    try {
+      // published before the check: a DELETE racing it is either seen
+      // here, or sees `shared` and cancels the group's jobs
+      q.shared = shared
+      if (q.answer.isDone) throw new Canceled // abandoned while it waited
+      // a read cannot change what a table resolves to, so only a
+      // statement on the exclusive side invalidates the shared cache
+      Scoped.run(spark, sessionConfs(q.session), q.defaultSchema,
+          commits = !shared) { session =>
+        val df = Lakehouse.sql(session, mapped)
+        val collected = df.limit(maxRows + 1).collect()
+        if (collected.length > maxRows)
+          throw new IllegalStateException(
+            s"result exceeds the wire-protocol bound ($maxRows rows) — " +
+              "use the CSV delivery plane for bulk results")
+        Answer(collected, df.schema)
+      }
+    } finally lock.unlock()
+  }
+
+  /** Run one statement on a statement-pool thread, under a job group of
+    * its own, and complete its answer. A DELETE that came first has
+    * completed the answer already; the statement then never starts. */
+  private def execute(spark: SparkSession, q: QueryState, reg: Registry,
+      maxRows: Int): Unit = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(q.id, q.sql, interruptOnCancel = true)
+    try if (!q.answer.isDone) q.answer.complete(answer(spark, q, reg, maxRows))
+    catch {
+      case e: Throwable =>
+        q.answer.completeExceptionally(e)
+        if (!NonFatal(e)) throw e
+    } finally sc.clearJobGroup()
+  }
+
+  /** The statement's answer: session verbs are bookkeeping answered with
+    * response headers; everything else runs through [[runStatement]]. */
+  private def answer(spark: SparkSession, q: QueryState, reg: Registry,
+      maxRows: Int): Answer = {
+    def encode(v: String) = java.net.URLEncoder.encode(v, "UTF-8")
+    q.sql match {
+      case SetSessionRx(k, raw) =>
+        val v = raw.trim.stripSuffix(";").trim match {
+          case s if s.length >= 2 && s.startsWith("'") && s.endsWith("'") =>
+            s.substring(1, s.length - 1).replace("''", "'")
+          case s => s
+        }
+        ok("X-Trino-Set-Session" -> (k + "=" + encode(v)))
+      case ResetSessionRx(k) => ok("X-Trino-Reset-Session" -> k)
+      case PrepareRx(name, text) =>
+        // Trino's PREPARE is pure session bookkeeping: the server
+        // answers X-Trino-Added-Prepare and the CLIENT carries the
+        // statement back on later requests — stateless server-side,
+        // like SET SESSION. Text is stored verbatim (dialect
+        // mapping happens at EXECUTE time, on the bound text).
+        ok("X-Trino-Added-Prepare" ->
+          (name + "=" + encode(text.trim.stripSuffix(";").trim)))
+      case DeallocateRx(name) => ok("X-Trino-Deallocated-Prepare" -> name)
+      case ExecuteImmediateRx(text, usingRaw) =>
+        val args = Option(usingRaw)
+          .map(u => splitArgs(u.trim.stripSuffix(";")))
+          .getOrElse(Seq.empty)
+        runStatement(spark, q, bindParameters(text.replace("''", "'"), args),
+          reg, maxRows)
+      case ExecuteRx(name, usingRaw) =>
+        val text = q.prepared.getOrElse(name,
+          throw new IllegalArgumentException(
+            s"prepared statement not found: $name"))
+        // the greedy USING capture swallows a bare trailing `;` —
+        // strip it here, never inside a quoted final argument
+        // (a quoted arg ends in its quote, not `;`)
+        val args = Option(usingRaw)
+          .map(u => splitArgs(u.trim.stripSuffix(";")))
+          .getOrElse(Seq.empty)
+        runStatement(spark, q, bindParameters(text, args), reg, maxRows)
+      case UseRx(cat, sch) =>
+        // Trino's USE answers X-Trino-Set-Catalog/-Schema response
+        // headers; the client carries them back as X-Trino-Schema.
+        // The engine serves ONE catalog (aliased `iceberg`) — an
+        // unknown catalog or schema refuses like Trino's
+        // CATALOG/SCHEMA_NOT_FOUND, never a silent accept that
+        // would make later unqualified reads resolve elsewhere.
+        if (cat != null && cat != "iceberg" && cat != "spark_catalog")
+          throw new IllegalArgumentException(s"catalog not found: $cat")
+        if (!spark.catalog.databaseExists(sch))
+          throw new IllegalArgumentException(s"schema not found: $sch")
+        ok("X-Trino-Set-Catalog" -> "iceberg", "X-Trino-Set-Schema" -> sch)
+      case _ => runStatement(spark, q, q.sql, reg, maxRows)
     }
   }
 
-  /** One paging step. Token 0 EXECUTES the statement (synchronously —
-    * the engine is its own coordinator; clients see QUEUED only on the
-    * POST echo, matching a fast-coordinator Trino) and serves the first
-    * page; token t serves rows [t·pageSize, (t+1)·pageSize). */
-  private def page(spark: SparkSession, q: QueryState, token: Long,
-      port: Int, pageSize: Int, maxRows: Int, reg: Registry): String = {
-    // execute-once under the query's own monitor (the same one retire()
-    // uses): two concurrent GETs of one nextUri — a client retry racing
-    // its own timed-out request — must not BOTH see rows==null and run
-    // the statement twice; with side-effecting paths (EXECUTE of a
-    // prepared INSERT) double-execution duplicates writes (round-16
-    // advisor). The loser blocks, re-checks, and serves the winner's
-    // cached result.
-    q.synchronized { if (q.rows == null && q.failed.isEmpty) {
-      try {
-        q.sql match {
-          case SetSessionRx(k, raw) =>
-            val v = raw.trim.stripSuffix(";").trim match {
-              case s if s.length >= 2 && s.startsWith("'") && s.endsWith("'") =>
-                s.substring(1, s.length - 1).replace("''", "'")
-              case s => s
-            }
-            q.setSession = Some(k -> v)
-            q.rows = Array(Row(true))
-            q.schema = StructType(Seq(StructField("result", BooleanType)))
-          case ResetSessionRx(k) =>
-            q.resetSession = Some(k)
-            q.rows = Array(Row(true))
-            q.schema = StructType(Seq(StructField("result", BooleanType)))
-          case PrepareRx(name, text) =>
-            // Trino's PREPARE is pure session bookkeeping: the server
-            // answers X-Trino-Added-Prepare and the CLIENT carries the
-            // statement back on later requests — stateless server-side,
-            // like SET SESSION. Text is stored verbatim (dialect
-            // mapping happens at EXECUTE time, on the bound text).
-            q.addedPrepare = Some(name -> text.trim.stripSuffix(";").trim)
-            q.rows = Array(Row(true))
-            q.schema = StructType(Seq(StructField("result", BooleanType)))
-          case DeallocateRx(name) =>
-            q.deallocatedPrepare = Some(name)
-            q.rows = Array(Row(true))
-            q.schema = StructType(Seq(StructField("result", BooleanType)))
-          case ExecuteImmediateRx(text, usingRaw) =>
-            val args = Option(usingRaw)
-              .map(u => splitArgs(u.trim.stripSuffix(";")))
-              .getOrElse(Seq.empty)
-            runStatement(spark, q,
-              bindParameters(text.replace("''", "'"), args), maxRows)
-          case ExecuteRx(name, usingRaw) =>
-            val text = q.prepared.getOrElse(name,
-              throw new IllegalArgumentException(
-                s"prepared statement not found: $name"))
-            // the greedy USING capture swallows a bare trailing `;` —
-            // strip it here, never inside a quoted final argument
-            // (a quoted arg ends in its quote, not `;`)
-            val args = Option(usingRaw)
-              .map(u => splitArgs(u.trim.stripSuffix(";")))
-              .getOrElse(Seq.empty)
-            runStatement(spark, q, bindParameters(text, args), maxRows)
-          case UseRx(cat, sch) =>
-            // Trino's USE answers X-Trino-Set-Catalog/-Schema response
-            // headers; the client carries them back as X-Trino-Schema.
-            // The engine serves ONE catalog (aliased `iceberg`) — an
-            // unknown catalog or schema refuses like Trino's
-            // CATALOG/SCHEMA_NOT_FOUND, never a silent accept that
-            // would make later unqualified reads resolve elsewhere.
-            if (cat != null && cat != "iceberg" && cat != "spark_catalog")
-              throw new IllegalArgumentException(s"catalog not found: $cat")
-            if (!spark.catalog.databaseExists(sch))
-              throw new IllegalArgumentException(s"schema not found: $sch")
-            q.setSchema = Some(sch)
-            q.rows = Array(Row(true))
-            q.schema = StructType(Seq(StructField("result", BooleanType)))
-          case _ => runStatement(spark, q, q.sql, maxRows)
-        }
-      } catch { case scala.util.control.NonFatal(e) => q.failed = Some(e) }
-    } }
+  /** One paging step, once the GET's wait on the statement is over:
+    * `None` (still running after [[LongPollMs]]) answers RUNNING with the
+    * same token as `nextUri`; a finished statement's token t serves rows
+    * [t·pageSize, (t+1)·pageSize). */
+  private def page(q: QueryState, outcome: Option[Try[Answer]], token: Long,
+      port: Int, pageSize: Int, reg: Registry): String = {
+    def nextUri(t: Long) = s"http://127.0.0.1:$port/v1/statement/executing/${q.id}/${q.slug}/$t"
     val zone: java.time.ZoneId = java.time.ZoneOffset.UTC // see POST: timestamp(3) is zone-less
     val n = mapper.createObjectNode()
     n.put("id", q.id)
     n.put("infoUri", s"http://127.0.0.1:$port/ui/query/${q.id}")
-    q.failed match {
-      case Some(e) =>
+    outcome match {
+      case None =>
+        n.put("nextUri", nextUri(token))
+        stats(n, "RUNNING", queued = false, q.user)
+      case Some(Failure(e)) =>
+        val canceled = e.isInstanceOf[Canceled]
         val err = mapper.createObjectNode()
         err.put("message", String.valueOf(e.getMessage))
-        err.put("errorCode", 1)
-        err.put("errorName", e.getClass.getSimpleName)
+        err.put("errorCode", if (canceled) 3 else 1)
+        err.put("errorName", if (canceled) "USER_CANCELED" else e.getClass.getSimpleName)
         err.put("errorType", "USER_ERROR")
         err.put("user", q.user)
         n.set[ObjectNode]("error", err)
         stats(n, "FAILED", queued = false, q.user)
-        retire(q, reg)
-      case None =>
-        n.set[ArrayNode]("columns", columnsJson(q.schema))
+        // a canceled query has left the registry already
+        if (!canceled) retire(q, reg)
+      case Some(Success(a)) =>
+        n.set[ArrayNode]("columns", columnsJson(a.schema))
         val from = (token * pageSize).toInt.max(0)
-        val until = math.min(q.rows.length, from + pageSize)
+        val until = math.min(a.rows.length, from + pageSize)
         if (from < until) {
           val data = mapper.createArrayNode()
           var i = from
           while (i < until) {
             val r = mapper.createArrayNode()
-            val row = q.rows(i)
+            val row = a.rows(i)
             var c = 0
-            while (c < q.schema.length) {
-              appendValue(r, row.get(c), q.schema(c).dataType, zone); c += 1
+            while (c < a.schema.length) {
+              appendValue(r, row.get(c), a.schema(c).dataType, zone); c += 1
             }
             data.add(r)
             i += 1
           }
           n.set[ArrayNode]("data", data)
         }
-        if (until < q.rows.length) {
-          n.put("nextUri",
-            s"http://127.0.0.1:$port/v1/statement/executing/${q.id}/${q.slug}/${token + 1}")
+        if (until < a.rows.length) {
+          n.put("nextUri", nextUri(token + 1))
           stats(n, "RUNNING", queued = false, q.user)
         } else {
           stats(n, "FINISHED", queued = false, q.user)

@@ -91,7 +91,8 @@ object BpeTrainer {
     // was ~5).
     val loopWidth = math.max(1, words.rdd.getNumPartitions)
     Scoped.run(docs.sparkSession, Map("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> loopWidth.toString), None) { scoped =>
+      "spark.sql.shuffle.partitions" -> loopWidth.toString), None,
+      commits = false) { scoped =>
     words = Scoped.reroot(words, scoped)
     var prev: Option[DataFrame] = None
     val merges = Seq.newBuilder[Merge]

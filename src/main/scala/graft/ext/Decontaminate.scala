@@ -160,7 +160,7 @@ object Decontaminate {
       "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" ->
         math.max(numBits, 1L << 26).toString,
       "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" ->
-        math.max(nItems, 4000000L).toString), None) { scoped =>
+        math.max(nItems, 4000000L).toString), None, commits = false) { scoped =>
       Scoped.reroot(testHashes, scoped)
         .agg(SketchExprs.bloomAgg(col("__h"), nItems, numBits).as("__bf"))
         .head().getAs[Array[Byte]]("__bf")

@@ -107,7 +107,8 @@ object WordPiece {
     // of task time). Corpus-sized work stays outside with AQE on.
     val loopWidth = math.max(1, words.rdd.getNumPartitions)
     Scoped.run(docs.sparkSession, Map("spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> loopWidth.toString), None) { scoped =>
+      "spark.sql.shuffle.partitions" -> loopWidth.toString), None,
+      commits = false) { scoped =>
     words = Scoped.reroot(words, scoped)
     var prev: Option[DataFrame] = None
     val out = Seq.newBuilder[Merge]

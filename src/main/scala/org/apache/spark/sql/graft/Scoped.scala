@@ -22,23 +22,28 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
   * to pick up the overrides. */
 object Scoped {
 
-  /** Run `body` with `confs` set and `schema` as the current database.
-    * With nothing to change it runs on `spark` itself. Otherwise it runs
-    * on a clone under `withActive`; afterwards the shared session's
-    * relation cache is invalidated, because a commit made in the clone
-    * (a DROP + CREATE at a new commit directory) refreshed only the
-    * clone's cache, and the shared session would otherwise keep
-    * resolving the table to the old directory that `gc` deletes. */
+  /** Run `body` with `confs` set and `schema` as the current database,
+    * with the session it runs on active for the call. With nothing to
+    * change it runs on `spark` itself. Otherwise it runs on a clone.
+    *
+    * `commits` says whether the body may commit to a table. If it may,
+    * the shared session's relation cache is invalidated after a cloned
+    * run, because a commit made in the clone (a DROP + CREATE at a new
+    * commit directory) refreshed only the clone's cache, and the shared
+    * session would otherwise keep resolving the table to the old
+    * directory that `gc` deletes. A body that only reads leaves the
+    * shared cache alone: a read cannot change what a table resolves to. */
   def run[T](spark: SparkSession, confs: Map[String, String],
-      schema: Option[String])(body: SparkSession => T): T = {
+      schema: Option[String], commits: Boolean = true)(body: SparkSession => T): T = {
+    val shared = spark.asInstanceOf[ClassicSession]
     val db = schema.filter(_ != spark.catalog.currentDatabase)
-    if (confs.isEmpty && db.isEmpty) body(spark)
+    if (confs.isEmpty && db.isEmpty) shared.withActive(body(spark))
     else {
-      val clone = spark.asInstanceOf[ClassicSession].cloneSession()
+      val clone = shared.cloneSession()
       confs.foreach { case (k, v) => clone.conf.set(k, v) }
       db.foreach(clone.catalog.setCurrentDatabase)
       try clone.withActive(body(clone))
-      finally spark.sessionState.catalog.invalidateAllCachedTables()
+      finally if (commits) spark.sessionState.catalog.invalidateAllCachedTables()
     }
   }
 
