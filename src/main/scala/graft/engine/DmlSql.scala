@@ -1,21 +1,26 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{expr, lit}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation, UnresolvedTable}
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, InsertIntoStatement,
+  LogicalPlan, SubqueryAlias, TruncatePartition, TruncateTable, UpdateTable}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.ParsedSql.{column, frame}
 
-/** SQL-surface row-level DML — `DELETE FROM t [WHERE ...]` and
-  * `UPDATE t SET c = e, ... [WHERE ...]`, the statements the
-  * reference's README invites from "any Trino client"
-  * (`/root/reference/README.md:49-66` shows CREATE/INSERT/SELECT;
-  * DELETE/UPDATE are Trino-Iceberg's next first-class verbs and
-  * strictly more common than the MERGE that already ships). Spark's v1
-  * parquet catalog refuses both natively ("DELETE is only supported
-  * with v2 tables"), while the engine has owned the machinery as APIs
-  * since round 14 — [[Layout.deleteWhere]] / [[Layout.updateWhere]].
-  * This router closes that API-only gap (round-17 verdict, "What's
-  * missing #1" — the same ring time travel and MERGE closed in rounds
-  * 16/17): parse the statement, hand the predicate/assignments to the
-  * Layout verbs, return Trino's affected-row count.
+/** SQL-surface row-level DML — `DELETE FROM t [WHERE ...]`,
+  * `UPDATE t SET c = e, ... [WHERE ...]`, `TRUNCATE TABLE t` and
+  * `INSERT [OVERWRITE] t <query>`, the statements the reference's README
+  * invites from "any Trino client" (its `README.md:49-66`).
+  * Spark's v1 parquet catalog refuses DELETE and UPDATE natively
+  * ("DELETE is only supported with v2 tables"), and runs TRUNCATE and
+  * INSERT OVERWRITE in place, under the manifest. Spark's parser parses
+  * each statement once in [[Lakehouse.sql]]; this executor takes the
+  * target, the predicate and the assignments from that parsed plan and
+  * hands them to the [[Layout]] verbs, returning Trino's affected-row
+  * count.
   *
   * Semantics (SQL standard, enforced by the Layout verbs):
   *
@@ -25,195 +30,144 @@ import org.apache.spark.sql.functions.{expr, lit}
   *     byte-identical. Assignments are CAST to the column's existing
   *     type, so `SET value = 0` on a DOUBLE column cannot silently
   *     narrow the table schema through the copy-on-write rewrite.
-  *   - Duplicate assignments to one column refuse at parse (the
-  *     standard; last-wins would hide a typo'd statement).
+  *   - Duplicate assignments to one column refuse (the standard;
+  *     last-wins would hide a typo'd statement).
   *
-  * Both commit through [[Layout.overwrite]] — copy-on-write, so DML
+  * All commit through [[Layout.overwrite]] — copy-on-write, so DML
   * composes with snapshot tags / time travel / CDC like every other
   * write, and a plain `SELECT * FROM t` is correct immediately (the
   * same COW-for-the-SQL-plane discipline [[MergeSql]] documents; the
   * O(matches) MOR variants [[Layout.deleteWhereMor]]/[[Layout.upsertMor]]
-  * stay at the API plane where readers are manifest-aware).
+  * stay at the API plane where readers are manifest-aware). A plain
+  * `INSERT INTO` runs as Spark runs it and then commits one `append`
+  * snapshot when the table is versioned.
   *
-  * Honest limit: predicates and assignment expressions are Spark
-  * expression syntax WITHOUT subqueries (`expr()` cannot carry an
-  * IN/EXISTS subquery into a Column filter) — a subquery predicate
-  * refuses loudly with the MERGE alternative, never a three-layers-down
-  * analysis error. */
+  * Predicates and assignments are Catalyst expressions resolved against
+  * the table's current state, without subqueries: a Column filter
+  * cannot carry an IN/EXISTS subquery, so one refuses loudly with the
+  * MERGE alternative, never a three-layers-down analysis error. */
 object DmlSql {
 
-  import SqlScan.{topLevelKeyword, splitTop, skipWs, readWord, insideLiteral}
-
-  private val DeleteRx = "(?is)^\\s*DELETE\\s+FROM\\s+".r
-  private val UpdateRx = "(?is)^\\s*UPDATE\\s+".r
-  private val TruncateRx = "(?is)^\\s*TRUNCATE\\s+TABLE\\s+".r
-  private val InsertOverwriteRx =
-    "(?is)^\\s*INSERT\\s+OVERWRITE\\s+(?:TABLE\\s+)?".r
-
-  /** Execute the statement if it IS a DELETE/UPDATE/TRUNCATE; None
-    * otherwise. TRUNCATE is intercepted for SAFETY, not convenience:
-    * Spark's native TRUNCATE deletes the files under the table
-    * location in place — on a versioned table that location is the
-    * latest commit directory, whose files the head manifest (and any
-    * tag pointing at it) records as immutable. Routed here it becomes
-    * an unconditioned COW delete commit: the table empties, every
-    * snapshot keeps reading its exact bytes. */
-  def maybeExecute(spark: SparkSession, sql: String): Option[DataFrame] = {
-    val s = sql.trim.stripSuffix(";").trim
-    DeleteRx.findFirstMatchIn(s).map(m => delete(spark, s, m.end))
-      .orElse(UpdateRx.findFirstMatchIn(s).map(m => update(spark, s, m.end)))
-      .orElse(TruncateRx.findFirstMatchIn(s).map(m => truncate(spark, s, m.end)))
-      .orElse(InsertOverwriteRx.findFirstMatchIn(s)
-        .map(m => insertOverwrite(spark, s, m.end)))
+  /** The statements this executor owns; `swap` puts the engine's
+    * relations into an INSERT's source query and target. */
+  def writes(spark: SparkSession, swap: LogicalPlan => LogicalPlan)
+      : PartialFunction[LogicalPlan, DataFrame] = {
+    case DeleteFromTable(t, cond) =>
+      val (table, cur) = current(spark, t, "DELETE")
+      noSubquery(cond, "DELETE WHERE")
+      rows(spark, Layout.deleteWhere(spark, table, column(cond), cur))
+    case UpdateTable(t, assigns, cond) =>
+      val (table, cur) = current(spark, t, "UPDATE")
+      (cond.toSeq ++ assigns.map(_.value)).foreach(noSubquery(_, "UPDATE"))
+      // CAST each assignment to the column's current type: updateWhere
+      // rewrites the whole table from the projected plan, so an untyped
+      // `SET value = 0` would otherwise retype DOUBLE→INT through the
+      // copy-on-write commit
+      val typed = assignments(assigns, "UPDATE SET").map { case (c, e) =>
+        val f = cur.schema.find(_.name == c).getOrElse(throw new IllegalArgumentException(
+          s"unknown column '$c' in UPDATE assignments"))
+        c -> column(e).cast(f.dataType)
+      }.toMap
+      rows(spark, Layout.updateWhere(spark, table,
+        column(cond.getOrElse(Literal.TrueLiteral)), typed, cur))
+    // Spark's native TRUNCATE deletes the files under the table location
+    // in place — on a versioned table, the latest commit's files. Here it
+    // is an unconditioned COW delete: every snapshot keeps its bytes.
+    case TruncateTable(t: UnresolvedTable) =>
+      val table = t.multipartIdentifier
+      requireTableTarget(spark, table, "TRUNCATE")
+      rows(spark, Layout.deleteWhere(spark, table.mkString("."), lit(true)))
+    case _: TruncatePartition => throw new IllegalArgumentException(
+      "TRUNCATE TABLE with a PARTITION spec is not supported — DELETE the partition's rows")
+    case i @ InsertIntoStatement(t: UnresolvedRelation, _, _, _, true, _, _) =>
+      insertOverwrite(spark, i, t.multipartIdentifier, swap)
+    case i: InsertIntoStatement if !i.overwrite =>
+      val done = frame(spark, swap(i))
+      swap(i.table) match {
+        case t: UnresolvedRelation => Layout.commitAppend(spark, t.multipartIdentifier.mkString("."))
+        case _ =>
+      }
+      done
   }
 
   /** `INSERT OVERWRITE [TABLE] t <query>` — the same in-place-delete
-    * hazard class as TRUNCATE: Spark's native path clears the files
-    * under the table location before writing, and on a versioned table
-    * those are the latest commit directory's manifest-recorded bytes.
-    * Routed here the query's result commits through [[Layout.overwrite]]
-    * (single write to a fresh commit dir + pointer swap), so every tag
-    * keeps reading its exact files. Static `PARTITION (...)` specs
-    * refuse loudly — partition-scoped overwrite composes differently
-    * (delete-matching + append) and a silent full-table overwrite under
-    * a partition spec would destroy data the user meant to keep. */
-  private def insertOverwrite(spark: SparkSession, s: String,
-      afterKw: Int): DataFrame = {
-    import spark.implicits._
-    val (table, i1) = readWord(s, afterKw)
-    require(table.nonEmpty, "INSERT OVERWRITE: missing table name")
-    requireTableTarget(spark, table, "INSERT OVERWRITE")
-    val rest = s.substring(skipWs(s, i1)).trim
-    require(!rest.toUpperCase.startsWith("PARTITION"),
+    * hazard as TRUNCATE: Spark's native path clears the files under the
+    * table location before writing. Here the query's result commits
+    * through [[Layout.overwrite]] (a fresh commit dir + pointer swap), so
+    * every tag keeps reading its exact files. Static `PARTITION (...)`
+    * specs refuse loudly — a silent full-table overwrite under a
+    * partition spec would destroy data the user meant to keep. */
+  private def insertOverwrite(spark: SparkSession, i: InsertIntoStatement,
+      name: Seq[String], swap: LogicalPlan => LogicalPlan): DataFrame = {
+    val table = name.mkString(".")
+    requireTableTarget(spark, name, "INSERT OVERWRITE")
+    require(i.partitionSpec.isEmpty,
       "INSERT OVERWRITE with a PARTITION spec is not supported — " +
         "DELETE the partition's rows, then INSERT INTO")
-    require(rest.nonEmpty, "INSERT OVERWRITE: missing source query")
-    val target = Layout.readCurrent(spark, table).schema
-    val src = spark.sql(rest)
-    require(src.schema.fields.length == target.fields.length,
-      s"INSERT OVERWRITE query yields ${src.schema.fields.length} columns, " +
-        s"$table has ${target.fields.length}")
+    require(i.userSpecifiedCols.isEmpty && !i.byName,
+      "INSERT OVERWRITE matches its query's columns by position only")
+    val target = spark.table(table).schema
+    val src = frame(spark, swap(i.query))
+    require(src.schema.length == target.length,
+      s"INSERT OVERWRITE query yields ${src.schema.length} columns, " +
+        s"$table has ${target.length}")
     // position-based with a cast to the table's types — INSERT's
     // standard column resolution
     val aligned = src.toDF(target.fieldNames.toIndexedSeq: _*)
-      .select(target.fields.map(f =>
-        org.apache.spark.sql.functions.col(f.name).cast(f.dataType).as(f.name))
-        .toIndexedSeq: _*)
+      .select(target.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
     Layout.overwrite(spark, table, aligned, operation = "insert-overwrite")
-    val n = spark.table(table).count()
-    Seq(n).toDF("rows")
+    rows(spark, spark.table(table).count())
+  }
+
+  /** The target a statement names and its current state, read once and
+    * aliased as the statement wrote it (`t AS a`, or the name itself). */
+  private[engine] def current(spark: SparkSession, target: LogicalPlan,
+      what: String): (String, DataFrame) = {
+    val (name, alias) = target match {
+      case SubqueryAlias(id, r: UnresolvedRelation) => (r.multipartIdentifier, Seq(id.name))
+      case r: UnresolvedRelation => (r.multipartIdentifier, r.multipartIdentifier)
+      case other => throw new IllegalArgumentException(
+        s"$what target must be a table name, not ${other.nodeName}")
+    }
+    requireTableTarget(spark, name, what)
+    val table = name.mkString(".")
+    (table, frame(spark,
+      SubqueryAlias(alias, Layout.readCurrent(spark, table).queryExecution.analyzed)))
+  }
+
+  /** Each SET target's column name with its value; a column assigned
+    * twice refuses. */
+  private[engine] def assignments(assigns: Seq[Assignment],
+      what: String): Seq[(String, Expression)] = {
+    val named = assigns.map(a => a.key match {
+      case k: UnresolvedAttribute => k.nameParts.mkString(".") -> a.value
+      case k => throw new IllegalArgumentException(s"bad assignment target in $what: ${k.sql}")
+    })
+    named.map(_._1).diff(named.map(_._1).distinct).headOption.foreach(c =>
+      throw new IllegalArgumentException(s"duplicate assignment to column '$c' in $what"))
+    named
   }
 
   /** Refuse a DML target that is a VIEW before any work: the
     * copy-on-write commit would otherwise fail three layers down
     * (DROP TABLE on a view) after having written the rewrite. */
-  private def requireTableTarget(spark: SparkSession, table: String,
+  private def requireTableTarget(spark: SparkSession, name: Seq[String],
       what: String): Unit = {
-    val leaf = table.split('.').last
-    val db = table.split('.').dropRight(1).lastOption
     val isView =
-      try {
-        val t = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(leaf, db))
-        t.tableType == org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW
-      } catch { case scala.util.control.NonFatal(_) => false }
-    require(!isView, s"$what target $table is a view — DML needs a table")
+      try spark.sessionState.catalog.getTableMetadata(
+        TableIdentifier(name.last, name.dropRight(1).lastOption))
+        .tableType == CatalogTableType.VIEW
+      catch { case scala.util.control.NonFatal(_) => false }
+    require(!isView, s"$what target ${name.mkString(".")} is a view — DML needs a table")
   }
 
-  private def truncate(spark: SparkSession, s: String, afterKw: Int): DataFrame = {
-    import spark.implicits._
-    val (table, i1) = readWord(s, afterKw)
-    require(table.nonEmpty, "TRUNCATE TABLE: missing table name")
-    require(s.substring(skipWs(s, i1)).isEmpty,
-      s"cannot parse TRUNCATE statement tail: ${s.substring(i1).trim}")
-    requireTableTarget(spark, table, "TRUNCATE")
-    val n = Layout.deleteWhere(spark, table, lit(true))
-    Seq(n).toDF("rows")
-  }
-
-  /** Refuse subquery predicates with a targeted message: a SELECT
-    * keyword outside string literals cannot reach `expr()`-built
-    * Columns (Spark resolves IN/EXISTS subqueries only through full
-    * SQL statements). */
-  private def requireNoSubquery(text: String, what: String): Unit = {
-    val rx = "(?i)\\bSELECT\\b".r
-    val hit = rx.findAllMatchIn(text).exists(m => !insideLiteral(text, m.start))
-    require(!hit,
+  private def noSubquery(e: Expression, what: String): Unit =
+    require(!e.exists(_.isInstanceOf[SubqueryExpression]),
       s"subqueries are not supported in $what — materialize the key set " +
         "into a table and use MERGE INTO ... WHEN MATCHED THEN DELETE/UPDATE")
-  }
 
-  private def predicate(whereText: Option[String], what: String): Column =
-    whereText match {
-      case None => lit(true)
-      case Some(w) =>
-        require(w.nonEmpty, s"empty WHERE clause in $what")
-        requireNoSubquery(w, s"$what WHERE")
-        expr(w)
-    }
-
-  private def delete(spark: SparkSession, s: String, afterFrom: Int): DataFrame = {
+  private def rows(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
-    val (table, i1) = readWord(s, afterFrom)
-    require(table.nonEmpty, "DELETE FROM: missing table name")
-    requireTableTarget(spark, table, "DELETE")
-    val rest = s.substring(skipWs(s, i1))
-    val whereText =
-      if (rest.isEmpty) None
-      else {
-        val m = "(?is)^WHERE\\b(.*)$".r.findFirstMatchIn(rest)
-          .getOrElse(throw new IllegalArgumentException(
-            s"cannot parse DELETE statement tail: $rest — supported: " +
-              "DELETE FROM t [WHERE <predicate>]"))
-        Some(m.group(1).trim)
-      }
-    val n = Layout.deleteWhere(spark, table,
-      predicate(whereText, "DELETE"))
-    Seq(n).toDF("rows")
-  }
-
-  private def update(spark: SparkSession, s: String, afterUpdate: Int): DataFrame = {
-    import spark.implicits._
-    val (table, i1) = readWord(s, afterUpdate)
-    require(table.nonEmpty, "UPDATE: missing table name")
-    requireTableTarget(spark, table, "UPDATE")
-    val (setKw, i2) = readWord(s, i1)
-    require(setKw.equalsIgnoreCase("SET"),
-      s"UPDATE: expected SET, found '$setKw'")
-    // WHERE found CASE-aware: an assignment like
-    // `SET v = CASE WHEN ... END` must not have an inner keyword
-    // mistaken for the clause boundary
-    val whereIdx = topLevelKeyword(s, "WHERE", i2)
-    val setText = (if (whereIdx < 0) s.substring(i2)
-      else s.substring(i2, whereIdx)).trim
-    require(setText.nonEmpty, "UPDATE: empty SET list")
-    val whereText =
-      if (whereIdx < 0) None
-      else Some(s.substring(whereIdx + 5).trim)
-    requireNoSubquery(setText, "UPDATE SET")
-    val assigns: Seq[(String, String)] = splitTop(setText).map { a =>
-      val eq = a.indexOf('=')
-      require(eq > 0, s"bad assignment in UPDATE SET: $a")
-      (a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`"),
-        a.substring(eq + 1).trim)
-    }
-    val dup = assigns.map(_._1).groupBy(identity)
-      .collectFirst { case (c, hits) if hits.size > 1 => c }
-    require(dup.isEmpty,
-      s"duplicate assignment to column '${dup.getOrElse("")}' in UPDATE SET")
-    // CAST each assignment to the column's current type: updateWhere
-    // rewrites the whole table from the projected plan, so an untyped
-    // `SET value = 0` would otherwise retype DOUBLE→INT through the
-    // copy-on-write commit
-    val schema = Layout.readCurrent(spark, table).schema
-    val typed: Map[String, Column] = assigns.map { case (c, e) =>
-      val f = schema.fields.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(
-          s"unknown column '$c' in UPDATE assignments"))
-      c -> expr(e).cast(f.dataType)
-    }.toMap
-    val n = Layout.updateWhere(spark, table,
-      predicate(whereText, "UPDATE"), typed)
     Seq(n).toDF("rows")
   }
 }

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, Literal, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.types.StringType
@@ -29,9 +30,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Mechanism: [[Lakehouse.sql]] swaps each parsed
   * `[catalog.]information_schema.<rel>` reference (any leg backticked,
-  * any case) for the one relation it names, built from `spark.catalog`
-  * at that moment — the live catalog, never a stale materialization, and
-  * nothing registered on the session. Served relations: `schemata`,
+  * any case) for the one relation it names, built from the session
+  * catalog at that moment — the live catalog, never a stale
+  * materialization, and nothing registered on the session. Served relations: `schemata`,
   * `tables`, `views`, `columns` (ANSI column sets, Trino type names via
   * [[StatementHttp.trinoType]]). The `iceberg` and `spark_catalog`
   * qualifiers serve; any other refuses with the catalog message, and an
@@ -131,40 +132,35 @@ object InfoSchema extends PredicateHelper {
       scope: (Option[String], Option[String])): LogicalPlan = {
     import spark.implicits._
     val (wantSchema, wantTable) = scope
-    val dbs = spark.catalog.listDatabases().collect().map(_.name).sorted.toSeq
-    // (schema, name, table_type) of every catalog-owned table in scope
+    // the session catalog lists metadata without a Spark job, which
+    // `spark.catalog.listDatabases`/`listTables` each run
+    val catalog = spark.sessionState.catalog
+    val dbs = catalog.listDatabases().sorted
+    // (schema, name, table_type, view text) of every catalog-owned table in scope;
+    // temporary views carry no database
     lazy val tables = dbs.filter(d => wantSchema.forall(_ == d)).flatMap { d =>
-      spark.catalog.listTables(d).collect()
-        .filter(t => t.tableType != "TEMPORARY" && t.database != null)
+      catalog.getTablesByName(catalog.listTables(d).filter(t =>
+        t.database.contains(d) && wantTable.forall(_ == t.table)))
         .map { t =>
-          val typ = if (t.tableType == "VIEW") "VIEW" else "BASE TABLE"
-          (d, t.name, typ)
+          val typ = if (t.tableType == CatalogTableType.VIEW) "VIEW" else "BASE TABLE"
+          (d, t.identifier.table, typ, t.viewText.orNull)
         }.sortBy(_._2)
-    }.filter { case (_, n, _) => wantTable.forall(_ == n) }
+    }
     Lakehouse.relation(r.multipartIdentifier, r.multipartIdentifier.last.toLowerCase match {
       case "schemata" => dbs.map(d => (Cat, d)).toDF("catalog_name", "schema_name")
       case "tables" =>
-        tables.map { case (d, n, ty) => (Cat, d, n, ty) }
+        tables.map { case (d, n, ty, _) => (Cat, d, n, ty) }
           .toDF("table_catalog", "table_schema", "table_name", "table_type")
       case "views" =>
         // view_definition is the view's stored SQL body (round-17
         // verdict "What's missing #3": the trino dialect's
         // get_view_definition reads it — NULL left a Superset dataset
-        // built on a view introspecting blind). The per-view metadata
-        // fetch is driver-side catalog metadata, scoped to views only
-        // (few by construction); an unresolvable view lists with a NULL
-        // definition rather than taking down the introspection plane.
-        tables.filter(_._3 == "VIEW").map { case (d, n, _) =>
-          val text =
-            try spark.sessionState.catalog.getTableMetadata(
-              org.apache.spark.sql.catalyst.TableIdentifier(n, Some(d)))
-              .viewText.orNull
-            catch { case scala.util.control.NonFatal(_) => null }
-          (Cat, d, n, text)
-        }.toDF("table_catalog", "table_schema", "table_name", "view_definition")
+        // built on a view introspecting blind)
+        tables.collect { case (d, n, "VIEW", text) => (Cat, d, n, text) }
+          .toDF("table_catalog", "table_schema", "table_name", "view_definition")
       case "columns" =>
         lastColumnsWalk = tables.size
-        tables.flatMap { case (d, n, _) =>
+        tables.flatMap { case (d, n, _, _) =>
           // one UNRESOLVABLE table (dropped path, broken view) must not
           // take down the whole introspection plane — Superset refreshes
           // one dataset while another is mid-migration; the broken table

@@ -12,8 +12,8 @@ import org.apache.spark.sql.graft.ParsedSql
   *   - `CREATE SCHEMA ... WITH (location=...)` (seed.sh:65) → createSchema
   *   - `CREATE TABLE` typed DDL (seed.sh:72...)             → createTable
   *   - `DROP TABLE IF EXISTS` (seed.sh:69...)               → dropTable
-  *   - `INSERT INTO ... VALUES` (README.md:62)              → plain spark.sql
-  *   - `INSERT INTO ... SELECT` (seed.sh:75...)             → plain spark.sql
+  *   - `INSERT INTO ... VALUES` (README.md:62)              → [[sql]]
+  *   - `INSERT INTO ... SELECT` (seed.sh:75...)             → [[sql]]
   *
   * Everything routes through Spark's own SQL parser and analyzer, not a
   * private API. Catalog versioning (the reference's Nessie refs) is served
@@ -56,15 +56,22 @@ object Lakehouse {
   /** Ad-hoc SQL entry point (README.md:49-50, §3.3) — the full statement
     * surface is whatever Spark SQL parses, plus the engine's own spellings.
     *
-    * Statement routers run first, for the commands Spark's v1 parquet
-    * catalog refuses natively: `MERGE INTO` ([[MergeSql]]), row-level
-    * `DELETE FROM` / `UPDATE ... SET` ([[DmlSql]]), the maintenance verbs
+    * Three text routers take the statements Spark's grammar refuses or
+    * that the engine owns outright: the maintenance verbs
     * `ALTER TABLE ... EXECUTE` / `CALL system.*` ([[TableFunctions]]),
     * tag and branch DDL ([[AlterSql]]) and `SHOW STATS` ([[ShowStats]]).
     *
-    * Every other statement is parsed once by the session's parser, and the
-    * engine's relations are swapped into the parsed plan before analysis,
-    * each as a `SubqueryAlias` over the plan its builder returns:
+    * Every other statement is parsed once by the session's parser, and
+    * the router dispatches on the parsed plan:
+    *   - `MergeIntoTable` runs in [[MergeSql]];
+    *   - `UpdateTable`, `DeleteFromTable`, `TruncateTable` and
+    *     `InsertIntoStatement` run in [[DmlSql]] — copy-on-write commits,
+    *     and a plain INSERT into a versioned table commits `append`;
+    *   - anything else runs as Spark runs it.
+    *
+    * The engine's relations are swapped into the parsed plan before
+    * analysis — a write's source query included — each as a
+    * `SubqueryAlias` over the plan its builder returns:
     *   - `information_schema.<rel>` — the live-catalog introspection
     *     relations Superset reads ([[InfoSchema]]);
     *   - `` `t$snapshots` `` and the other Iceberg metadata tables
@@ -78,15 +85,17 @@ object Lakehouse {
     * subqueries, CTE definitions, the statement under `EXPLAIN` and an
     * `INSERT`'s target (`` INSERT INTO `t@branch` `` writes the branch). */
   def sql(spark: SparkSession, text: String): DataFrame =
-    MergeSql.maybeExecute(spark, text)
-      .orElse(DmlSql.maybeExecute(spark, text))
-      .orElse(TableFunctions.maybeExecute(spark, text))
+    TableFunctions.maybeExecute(spark, text)
       .orElse(AlterSql.maybeExecute(spark, text))
       .orElse(ShowStats.maybeExecute(spark, text))
-      .getOrElse(ParsedSql.run(spark, text)(withRelations(spark)))
+      .getOrElse {
+        val swap = withRelations(spark) _
+        ParsedSql.run(spark, MergeSql.positionalInserts(text))(
+          MergeSql.writes(spark, swap).orElse(DmlSql.writes(spark, swap)), swap)
+      }
 
   /** The parsed plan with the engine's relations swapped in. */
-  private def withRelations(spark: SparkSession)(plan: LogicalPlan): LogicalPlan = {
+  private[engine] def withRelations(spark: SparkSession)(plan: LogicalPlan): LogicalPlan = {
     val served = InfoSchema.served(spark)
       .orElse(MetaSql.served(spark))
       .orElse(TimeTravel.served(spark))

@@ -258,10 +258,18 @@ object Layout {
   private def currentSnapshot(spark: SparkSession,
       table: String): Manifests.Snapshot = {
     val loc = tableLocation(spark, table)
-    val live = Manifests.listDataFiles(loc)
+    currentSnapshot(spark, table, headSnapshot(spark, table), loc,
+      Manifests.listDataFiles(loc))
+  }
+
+  /** [[currentSnapshot]] from the `head`, location and `live` files the
+    * caller already read. */
+  private def currentSnapshot(spark: SparkSession, table: String,
+      head: Option[Manifests.Snapshot], loc: Path,
+      live: Seq[(String, Long)]): Manifests.Snapshot = {
     val nextSeq = Manifests.loadRefs(Manifests.root(spark, table)).nextSeq
     val schemaJson = spark.table(table).schema.json
-    headSnapshot(spark, table) match {
+    head match {
       case Some(h) =>
         val known = h.files.map(_.path).toSet
         val extras = live.filterNot { case (p, _) => known(p) }
@@ -281,20 +289,32 @@ object Layout {
   /** Like [[currentSnapshot]] but COMMITTED if the head was missing or
     * stale — MOR writers call this first so pre-existing rows get a data
     * sequence number strictly below the writer's own commit seq (the
-    * scoping equality deletes rely on). */
-  private def ensureHeadCurrent(spark: SparkSession,
-      table: String): Manifests.Snapshot = {
+    * scoping equality deletes rely on). `head` is the table's head as
+    * the caller loaded it. */
+  private def ensureHeadCurrent(spark: SparkSession, table: String,
+      head: Option[Manifests.Snapshot],
+      operation: String = "mor-base"): Manifests.Snapshot = {
     val root = Manifests.root(spark, table)
-    val live = Manifests.listDataFiles(tableLocation(spark, table)).map(_._1)
-    headSnapshot(spark, table) match {
-      case Some(h) if live.forall(h.files.map(_.path).toSet) => h
+    val loc = tableLocation(spark, table)
+    val live = Manifests.listDataFiles(loc)
+    head match {
+      case Some(h) if live.map(_._1).forall(h.files.map(_.path).toSet) => h
       case _ =>
-        val cur = currentSnapshot(spark, table)
-        val seq = Manifests.commit(spark, table, "mor-base", cur.basePath,
+        val cur = currentSnapshot(spark, table, head, loc, live)
+        val seq = Manifests.commit(spark, table, operation, cur.basePath,
           cur.schemaJson, cur.files, deletes = cur.deleteEntries,
           eqDeletes = cur.eqDeleteEntries)
         Manifests.loadSnapshot(root, seq)
     }
+  }
+
+  /** Commit the files a SQL `INSERT` added to a versioned table as one
+    * `append` snapshot: the head's files plus the new ones,
+    * stats-collected, so the state right after the INSERT has an id. A
+    * table with no committed head stays a plain table. */
+  def commitAppend(spark: SparkSession, table: String): Unit = {
+    val head = headSnapshot(spark, table)
+    if (head.nonEmpty) ensureHeadCurrent(spark, table, head, operation = "append")
   }
 
   private def tagSnapshot(spark: SparkSession, table: String,
@@ -562,7 +582,7 @@ object Layout {
   def deleteWhereMor(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column): Long = {
     ensureVersioned(spark, table)
-    val head = ensureHeadCurrent(spark, table)
+    val head = ensureHeadCurrent(spark, table, headSnapshot(spark, table))
     val delDir = newCommitDir(spark, table)
     readManifestWithPos(spark, head)
       .filter(predicate)
@@ -604,7 +624,7 @@ object Layout {
   def upsertMor(spark: SparkSession, table: String, updates: DataFrame,
       keyCol: String): Unit = {
     ensureVersioned(spark, table)
-    val head = ensureHeadCurrent(spark, table)
+    val head = ensureHeadCurrent(spark, table, headSnapshot(spark, table))
     val tableCols = spark.table(table).columns.toSet
     require(updates.columns.toSet == tableCols,
       s"updates must carry the table's full schema ($tableCols)")
@@ -1219,8 +1239,13 @@ object Layout {
     * At real scale merge-on-read delete files avoid rewriting unmatched
     * files; this is the copy-on-write formulation, same as [[merge]]. */
   def deleteWhere(spark: SparkSession, table: String,
-      pred: org.apache.spark.sql.Column): Long = {
-    val cur = readCurrent(spark, table)
+      pred: org.apache.spark.sql.Column): Long =
+    deleteWhere(spark, table, pred, readCurrent(spark, table))
+
+  /** [[deleteWhere]] over `cur`, the table's current state as the caller
+    * already read it (a SQL statement reads it once, under its alias). */
+  def deleteWhere(spark: SparkSession, table: String,
+      pred: org.apache.spark.sql.Column, cur: DataFrame): Long = {
     val hit = coalesce(pred, lit(false))
     val n = cur.filter(hit).count()
     if (n > 0) overwrite(spark, table, cur.filter(!hit), operation = "delete")
@@ -1233,8 +1258,15 @@ object Layout {
     * updated-row count. */
   def updateWhere(spark: SparkSession, table: String,
       pred: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column]): Long = {
-    val cur = readCurrent(spark, table)
+      assignments: Map[String, org.apache.spark.sql.Column]): Long =
+    updateWhere(spark, table, pred, assignments, readCurrent(spark, table))
+
+  /** [[updateWhere]] over `cur`, the table's current state as the caller
+    * already read it. */
+  def updateWhere(spark: SparkSession, table: String,
+      pred: org.apache.spark.sql.Column,
+      assignments: Map[String, org.apache.spark.sql.Column],
+      cur: DataFrame): Long = {
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
     assignments.keys.foreach(c => require(cur.columns.contains(c),
       s"unknown column '$c' in UPDATE assignments"))

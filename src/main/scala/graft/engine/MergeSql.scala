@@ -1,501 +1,266 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.antlr.v4.runtime.{CharStreams, CommonTokenStream, Token}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.parser.SqlBaseLexer
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteAction, InsertAction, LogicalPlan,
+  MergeAction, MergeIntoTable, UpdateAction}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParsedSql.{column, frame}
 
 /** SQL-surface `MERGE INTO` — the statement a Trino/Iceberg user types
   * (Trino docs `sql/merge`; the upsert idiom the reference's lakehouse
   * tier implies) landed on the [[Layout]] commit machinery. Spark's v1
   * parquet catalog refuses MERGE natively ("MERGE INTO TABLE is not
-  * supported temporarily"), so the statement is parsed here and
-  * EXECUTED as one declarative plan + one copy-on-write commit — one of
-  * [[Lakehouse.sql]]'s statement routers, which run before Spark's
-  * parser sees the text.
+  * supported temporarily"), so [[Lakehouse.sql]] hands Spark's parsed
+  * `MergeIntoTable` here, and it EXECUTES as one declarative plan + one
+  * copy-on-write commit.
   *
-  * Supported shape (the standard's core; at most one UPDATE, one
-  * DELETE, one NOT MATCHED clause, evaluated in TEXTUAL order like the
-  * standard requires; clause conditions may contain full expressions
-  * including `CASE ... WHEN ... THEN ... END` — the clause's own THEN
-  * is found by the CASE-aware scanner, never a lazy regex):
+  * Shape (Spark's grammar; clauses act in TEXTUAL order, the first whose
+  * condition holds wins, as the standard requires):
   *
   *   MERGE INTO t [AS a] USING s|(subquery) [AS b] ON <cond>
-  *     [WHEN MATCHED [AND c1] THEN UPDATE SET x = e1, ...]
-  *     [WHEN MATCHED [AND c2] THEN DELETE]
-  *     [WHEN NOT MATCHED [BY TARGET] [AND c3] THEN INSERT [(cols)] VALUES (...)]
-  *     [WHEN NOT MATCHED BY SOURCE [AND c4] THEN UPDATE SET ... | DELETE]
+  *     [WHEN MATCHED [AND c] THEN UPDATE SET x = e, ... | DELETE] ...
+  *     [WHEN NOT MATCHED [BY TARGET] [AND c] THEN INSERT [(cols)] VALUES (...)] ...
+  *     [WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET ... | DELETE] ...
   *
-  * `NOT MATCHED BY SOURCE` (Spark SQL's full-sync clause; `BY TARGET`
-  * is the standard alias for plain NOT MATCHED) acts on target rows
-  * with NO source match — the other half of a one-statement table
-  * sync. Its conditions and UPDATE expressions may reference only
-  * target columns (source columns are definitionally absent; naming
-  * one refuses in analysis). Guards are disjoint by construction
-  * (`__smatch` vs `NOT __smatch`), so the clause composes with the
-  * matched projections in the SAME single left join — no extra join
-  * for the kept side; its affected counts cost one anti-join aggregate
-  * run only when such clauses exist.
+  * `NOT MATCHED BY SOURCE` (Spark SQL's full-sync clause) acts on target
+  * rows with NO source match; its conditions and values may name target
+  * columns only. Its guard (no source match) is disjoint from every
+  * matched clause's, so both families ride the SAME left join.
   *
   * Plan shape — Spark-first, no row-at-a-time anything:
   *
   *   - kept/updated target rows: ONE left join target⟕source on the ON
-  *     condition, per-column `CASE WHEN <clause predicate> THEN expr
-  *     ELSE old END`, delete-clause rows filtered in the same pass;
-  *     with NO matched clauses the join is skipped entirely (the
-  *     target passes through untouched — an insert-only merge costs
-  *     one anti join, not two joins);
+  *     condition; `__act` numbers the clause that applies to each pair
+  *     (a first-match CASE WHEN), each column is `CASE WHEN __act = k
+  *     THEN <clause k's value> ELSE old END`, and delete-clause rows are
+  *     filtered in the same pass; with no clause acting on target rows
+  *     the join is skipped entirely (an insert-only merge costs one anti
+  *     join);
   *   - inserted rows: one LEFT ANTI join source⟂target;
   *   - the union commits through [[Layout.overwrite]], so MERGE
   *     composes with tags/branches/time travel like every other write.
   *
-  * The SQL standard's cardinality rule is ENFORCED the way the
-  * standard states it (and Trino/Spark implement it): a target row to
-  * which an UPDATE or DELETE **would be applied** by more than one
-  * source row refuses loudly. Extra matched pairs whose clause
-  * conditions are all false do NOT refuse — the row is updated by its
-  * one applicable pair (or kept unchanged), and the kept side
-  * deduplicates per target row only when the pre-pass detects
-  * multi-matches (a `row_number` window — the extra shuffle is paid
-  * only on statements that need it, never on the common ≤1-match
-  * merge). A statement with no MATCHED clauses skips the check (and
-  * the join) entirely.
+  * The SQL standard's cardinality rule is ENFORCED the way the standard
+  * states it: a target row to which an UPDATE or DELETE **would be
+  * applied** by more than one source row refuses loudly. Extra matched
+  * pairs whose clause conditions are all false do NOT refuse — the row is
+  * updated by its one applicable pair (or kept unchanged), and the kept
+  * side deduplicates per target row only when the pre-pass detects
+  * multi-matches (a `row_number` window — the extra shuffle is paid only
+  * on statements that need it).
   *
-  * Pre-pass cost (round-17 verdict "What's wrong #2", fixed): ONE
-  * aggregate over the matched pairs computes the cardinality maxima
-  * AND Trino's updated/deleted affected counts together, and the
+  * Pre-pass cost: ONE aggregate over the joined pairs computes the
+  * cardinality maxima AND Trino's updated/deleted affected counts
+  * together (zero without clauses acting on target rows), and the
   * inserted count is observed on the committed plan itself
-  * (`Dataset.observe` — the count comes from the exact materialization
-  * that was written, so a non-deterministic source can never make the
-  * reported count diverge from the committed rows). Jobs per MERGE:
-  * one pre-pass aggregate (zero without MATCHED clauses) + the commit
-  * write — down from three pre-passes.
+  * (`Dataset.observe`), so a non-deterministic source can never make the
+  * reported count diverge from the committed rows.
   *
-  * Scale: both joins shuffle on the ON keys once (broadcast when the
-  * source is small — AQE decides); the rewrite is copy-on-write like
-  * [[Layout.merge]].
-  *
-  * Why SQL MERGE is COW and not the O(batch) MOR path: the engine owns
-  * a merge-on-read upsert ([[Layout.upsertMor]] — equality-delete keys
-  * + appended rows, one commit, no table rewrite), but its result is
-  * only visible through manifest-aware reads (readCurrent/scanAt/
-  * morDeltas); a plain `SELECT * FROM t` at the SQL plane scans raw
-  * files and would see BOTH versions of every upserted key. Routing the
-  * statement there would silently change what the very next SELECT
-  * returns. So the SQL plane keeps copy-on-write semantics (every
+  * Why SQL MERGE is COW and not the O(batch) MOR path: the engine owns a
+  * merge-on-read upsert ([[Layout.upsertMor]]), but its result is only
+  * visible through manifest-aware reads; a plain `SELECT * FROM t` at the
+  * SQL plane scans raw files and would see BOTH versions of every
+  * upserted key. So the SQL plane keeps copy-on-write semantics (every
   * reader correct, Iceberg's COW mode), and the hot-ingest path uses
-  * upsertMor at the API plane where readers are manifest-aware — the
-  * same COW-for-BI / MOR-for-ingest split production lakehouses run. */
+  * upsertMor at the API plane where readers are manifest-aware. */
 object MergeSql {
 
-  private final case class Matched(cond: Option[String], isDelete: Boolean,
-      assignments: Seq[(String, String)])
-  private final case class NotMatched(cond: Option[String],
-      cols: Seq[String], values: Seq[String])
+  private val Positional = "__pos_"
 
-  private sealed trait Clause
-  private final case class MatchedC(m: Matched) extends Clause
-  private final case class NotMatchedC(nm: NotMatched) extends Clause
-  private final case class NotBySourceC(m: Matched) extends Clause
-
-  private val HeadRx = "(?is)^\\s*MERGE\\s+INTO\\s+".r
-
-  /** Execute the statement if it IS a MERGE INTO; None otherwise. */
-  def maybeExecute(spark: SparkSession, sql: String): Option[DataFrame] =
-    if (HeadRx.findFirstIn(sql).isEmpty) None
-    else Some(execute(spark, sql))
-
-  import SqlScan.{topLevelKeyword, splitTop, balancedParen, skipWs, readWord}
-
-  // -------------------------------------------------------------- parse
-
-  private final case class Parsed(table: String, targetAlias: String,
-      sourceRel: String, sourceAlias: String, cond: String,
-      matched: Seq[Matched], notMatched: Option[NotMatched],
-      notBySource: Seq[Matched])
-
-  /** Parse one `WHEN ...` clause. The clause's THEN is located with the
-    * CASE-aware scanner, so a condition like `AND CASE WHEN s.x > 1
-    * THEN true ELSE false END` parses instead of mangling (round-17
-    * verdict "What's wrong #3"). */
-  private def parseClause(cl: String): Clause = {
-    val head = ("(?is)^WHEN\\s+(NOT\\s+)?MATCHED" +
-      "(?:\\s+BY\\s+(SOURCE|TARGET))?\\b").r.findFirstMatchIn(cl)
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot parse MERGE clause: $cl — supported: WHEN MATCHED " +
-          "[AND c] THEN UPDATE SET ... | DELETE; WHEN NOT MATCHED " +
-          "[BY TARGET] [AND c] THEN INSERT [(cols)] VALUES (...); " +
-          "WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET ... | DELETE"))
-    val isNot = head.group(1) != null
-    val byLeg = Option(head.group(2)).map(_.toUpperCase)
-    require(isNot || byLeg.isEmpty,
-      s"BY ${byLeg.getOrElse("")} requires NOT MATCHED: $cl")
-    val bySource = isNot && byLeg.contains("SOURCE")
-    // NOT MATCHED [BY TARGET] inserts; NOT MATCHED BY SOURCE acts on
-    // unmatched TARGET rows like a matched clause does
-    val isNotMatched = isNot && !bySource
-    val condStart = skipWs(cl, head.end)
-    val thenIdx = topLevelKeyword(cl, "THEN", condStart)
-    require(thenIdx > 0, s"cannot parse MERGE clause (missing THEN): $cl")
-    val condText = cl.substring(condStart, thenIdx).trim
-    val cond: Option[String] =
-      if (condText.isEmpty) None
-      else "(?is)^AND\\b(.*)$".r.findFirstMatchIn(condText) match {
-        case Some(m) => Some(m.group(1).trim)
-        case None => throw new IllegalArgumentException(
-          s"cannot parse MERGE clause condition (expected AND): $cl")
-      }
-    val action = cl.substring(thenIdx + 4).trim.stripSuffix(";").trim
-    val UpdateRx = "(?is)^UPDATE\\s+SET\\s+(.*)$".r
-    val InsertRx =
-      "(?is)^INSERT\\s*(\\([^)]*\\))?\\s*VALUES\\s*(\\(.*\\))\\s*$".r
-    if (isNotMatched) action match {
-      case InsertRx(colsOpt, values) =>
-        val cols = Option(colsOpt).map(c =>
-          splitTop(c.stripPrefix("(").stripSuffix(")"))
-            .map(_.stripPrefix("`").stripSuffix("`"))).getOrElse(Nil)
-        val vals = splitTop(values.trim.stripPrefix("(").stripSuffix(")"))
-        NotMatchedC(NotMatched(cond, cols, vals))
-      case other => throw new IllegalArgumentException(
-        s"WHEN NOT MATCHED supports only INSERT [(cols)] VALUES (...): $other")
-    } else action match {
-      case UpdateRx(setList) =>
-        val assigns = splitTop(setList).map { a =>
-          val eq = a.indexOf('=')
-          require(eq > 0, s"bad assignment in UPDATE SET: $a")
-          (a.substring(0, eq).trim.stripPrefix("`").stripSuffix("`"),
-            a.substring(eq + 1).trim)
-        }
-        // the standard: each column at most once per SET list — a
-        // silent last-wins .toMap collapse would make `SET x = 1,
-        // x = 2` succeed with an arbitrary winner (round-17 advisor)
-        val dup = assigns.map(_._1).groupBy(identity)
-          .collectFirst { case (c, hits) if hits.size > 1 => c }
-        require(dup.isEmpty,
-          s"duplicate assignment to column '${dup.getOrElse("")}' in UPDATE SET")
-        val m = Matched(cond, isDelete = false, assigns)
-        if (bySource) NotBySourceC(m) else MatchedC(m)
-      case d if d.equalsIgnoreCase("DELETE") =>
-        val m = Matched(cond, isDelete = true, Nil)
-        if (bySource) NotBySourceC(m) else MatchedC(m)
-      case other => throw new IllegalArgumentException(
-        s"WHEN ${if (bySource) "NOT MATCHED BY SOURCE" else "MATCHED"} " +
-          s"supports only UPDATE SET ... or DELETE: $other")
-    }
+  /** The statement this executor owns; `swap` puts the engine's
+    * relations into the source. */
+  def writes(spark: SparkSession, swap: LogicalPlan => LogicalPlan)
+      : PartialFunction[LogicalPlan, DataFrame] = {
+    case m: MergeIntoTable => execute(spark, new Plan(spark, m, swap))
   }
 
-  private def parse(sql: String): Parsed = {
-    val s = sql.trim.stripSuffix(";").trim
-    val head = HeadRx.findFirstMatchIn(s).get
-    var i = head.end
-    val (table, i1) = readWord(s, i)
-    require(table.nonEmpty, "MERGE INTO: missing target table")
-    i = skipWs(s, i1)
-    // optional [AS] alias before USING
-    var targetAlias = table.split('.').last
-    val (w1, i2) = readWord(s, i)
-    if (w1.equalsIgnoreCase("AS")) {
-      val (a, i3) = readWord(s, i2); targetAlias = a; i = skipWs(s, i3)
-    } else if (!w1.equalsIgnoreCase("USING") && w1.nonEmpty) {
-      targetAlias = w1; i = skipWs(s, i2)
-    }
-    val (using, i4) = readWord(s, i)
-    require(using.equalsIgnoreCase("USING"),
-      s"MERGE INTO: expected USING, found '$using'")
-    i = skipWs(s, i4)
-    // source: (subquery) or table name
-    var sourceRel: String = null
-    if (s.charAt(i) == '(') {
-      val end = balancedParen(s, i)
-      sourceRel = s.substring(i, end)
-      i = skipWs(s, end)
-    } else {
-      val (src, i5) = readWord(s, i)
-      require(src.nonEmpty, "MERGE INTO: missing source relation")
-      sourceRel = src
-      i = skipWs(s, i5)
-    }
-    var sourceAlias =
-      if (sourceRel.startsWith("(")) "__merge_src"
-      else sourceRel.split('.').last
-    val (w2, i6) = readWord(s, i)
-    if (w2.equalsIgnoreCase("AS")) {
-      val (a, i7) = readWord(s, i6); sourceAlias = a; i = skipWs(s, i7)
-    } else if (!w2.equalsIgnoreCase("ON") && w2.nonEmpty) {
-      sourceAlias = w2; i = skipWs(s, i6)
-    }
-    val (on, i8) = readWord(s, i)
-    require(on.equalsIgnoreCase("ON"), s"MERGE INTO: expected ON, found '$on'")
-    i = i8
-    val firstWhen = topLevelKeyword(s, "WHEN", i)
-    require(firstWhen > 0, "MERGE INTO: needs at least one WHEN clause")
-    val cond = s.substring(i, firstWhen).trim
-    require(cond.nonEmpty, "MERGE INTO: empty ON condition")
-
-    // split the tail into WHEN clauses at top level
-    var starts = Seq.newBuilder[Int]
-    var at = firstWhen
-    while (at >= 0) {
-      starts += at
-      at = topLevelKeyword(s, "WHEN", at + 4)
-    }
-    val idxs = starts.result()
-    val clauses = idxs.zipWithIndex.map { case (st, k) =>
-      val en = if (k + 1 < idxs.length) idxs(k + 1) else s.length
-      s.substring(st, en).trim
-    }
-
-    var matched = Seq.newBuilder[Matched]
-    var notM: Option[NotMatched] = None
-    var nbs = Seq.newBuilder[Matched]
-    clauses.foreach { cl =>
-      parseClause(cl) match {
-        case MatchedC(m) => matched += m
-        case NotBySourceC(m) => nbs += m
-        case NotMatchedC(nm) =>
-          require(notM.isEmpty, "MERGE INTO: at most one WHEN NOT MATCHED clause")
-          notM = Some(nm)
-      }
-    }
-    val ms = matched.result()
-    require(ms.count(!_.isDelete) <= 1, "MERGE INTO: at most one UPDATE clause")
-    require(ms.count(_.isDelete) <= 1, "MERGE INTO: at most one DELETE clause")
-    val ns = nbs.result()
-    require(ns.count(!_.isDelete) <= 1,
-      "MERGE INTO: at most one NOT MATCHED BY SOURCE UPDATE clause")
-    require(ns.count(_.isDelete) <= 1,
-      "MERGE INTO: at most one NOT MATCHED BY SOURCE DELETE clause")
-    Parsed(table, targetAlias, sourceRel, sourceAlias, cond, ms, notM, ns)
-  }
-
-  // ------------------------------------------------------------- execute
-
-  private final case class Built(kept: DataFrame, inserted: Option[DataFrame],
-      updPred: String, delPred: String, applicablePred: String,
-      joinFrom: String)
-
-  /** Build the kept/updated and inserted sides for a parsed statement —
-    * pure plan construction, no jobs.
-    *
-    * `dedupe = true` adds a per-target-row `row_number` reduction over
-    * the join output (applicable pair first): the degraded path for
-    * statements where some target row has EXTRA matched pairs whose
-    * clause conditions are all false — valid per the standard, but a
-    * bare left join would emit that target row once per pair. The
-    * window shuffles on the synthetic `__tid`, and is only requested
-    * when the pre-pass has proven multi-matches exist. */
-  private def build(spark: SparkSession, p: Parsed, tgtView: String,
-      dedupe: Boolean = false): Built = {
-    val target = Layout.readCurrent(spark, p.table)
-    val tcols = target.schema.fields.toSeq
-    val ta = s"`${p.targetAlias}`"
-    val sa = s"`${p.sourceAlias}`"
-    val srcRel = s"(SELECT *, true AS __smatch FROM ${p.sourceRel} ) AS $sa"
-    val joinFrom = s"FROM $tgtView AS $ta LEFT JOIN $srcRel ON (${p.cond})"
-    // clause predicates in TEXTUAL order: first applicable wins
-    def clausePred(k: Int): String = {
-      val own = s"coalesce((${p.matched(k).cond.getOrElse("true")}), false)"
-      val priors = p.matched.take(k).map(c =>
-        s"NOT coalesce((${c.cond.getOrElse("true")}), false)")
-      (Seq(s"coalesce($sa.__smatch, false)", own) ++ priors).mkString(" AND ")
-    }
-    val updIdx = p.matched.indexWhere(!_.isDelete)
-    val delIdx = p.matched.indexWhere(_.isDelete)
-    val updPred = if (updIdx < 0) "false" else clausePred(updIdx)
-    val delPred = if (delIdx < 0) "false" else clausePred(delIdx)
-    // NOT MATCHED BY SOURCE predicates: the unmatched-guard makes them
-    // disjoint from every matched-clause predicate, so both families
-    // ride the SAME left join's projections
-    def nbsClausePred(k: Int): String = {
-      val own = s"coalesce((${p.notBySource(k).cond.getOrElse("true")}), false)"
-      val priors = p.notBySource.take(k).map(c =>
-        s"NOT coalesce((${c.cond.getOrElse("true")}), false)")
-      (Seq(s"NOT coalesce($sa.__smatch, false)", own) ++ priors).mkString(" AND ")
-    }
-    val nbsUpdIdx = p.notBySource.indexWhere(!_.isDelete)
-    val nbsDelIdx = p.notBySource.indexWhere(_.isDelete)
-    val nbsUpdPred = if (nbsUpdIdx < 0) "false" else nbsClausePred(nbsUpdIdx)
-    val nbsDelPred = if (nbsDelIdx < 0) "false" else nbsClausePred(nbsDelIdx)
-    val nbsAssigns: Map[String, String] =
-      if (nbsUpdIdx < 0) Map.empty
-      else p.notBySource(nbsUpdIdx).assignments.toMap
-    nbsAssigns.keys.foreach(c => require(tcols.exists(_.name == c),
-      s"NOT MATCHED BY SOURCE UPDATE SET names unknown column '$c' of ${p.table}"))
-    // "some MATCHED clause applies to this pair" — the cardinality
-    // rule's unit, and the dedupe window's ordering key
-    val applicablePred =
-      if (p.matched.isEmpty) "false"
-      else s"coalesce($sa.__smatch, false) AND (" + p.matched.map(c =>
-        s"coalesce((${c.cond.getOrElse("true")}), false)").mkString(" OR ") + ")"
-    val assigns: Map[String, String] =
-      if (updIdx < 0) Map.empty else p.matched(updIdx).assignments.toMap
-    assigns.keys.foreach(c => require(tcols.exists(_.name == c),
-      s"UPDATE SET names unknown column '$c' of ${p.table}"))
-    val keptSelect = tcols.map { f =>
-      val c = s"`${f.name}`"
-      val arms = Seq(
-        assigns.get(f.name).map(e =>
-          s"WHEN $updPred THEN CAST(($e) AS ${f.dataType.sql})"),
-        nbsAssigns.get(f.name).map(e =>
-          s"WHEN $nbsUpdPred THEN CAST(($e) AS ${f.dataType.sql})")).flatten
-      if (arms.isEmpty) s"$ta.$c AS $c"
-      else s"CASE ${arms.mkString(" ")} ELSE $ta.$c END AS $c"
-    }.mkString(",\n  ")
-    val keptFilter = s"NOT coalesce(($delPred), false) AND " +
-      s"NOT coalesce(($nbsDelPred), false)"
-    val kept =
-      if (p.matched.isEmpty && p.notBySource.isEmpty)
-        // insert-only merge: no clause can change or delete a target
-        // row, so the kept side is the target verbatim — no join
-        // (and no per-pair duplication for multi-matching source rows)
-        spark.sql("SELECT " +
-          tcols.map(f => s"`${f.name}`").mkString(", ") + s" FROM $tgtView")
-      else if (!dedupe)
-        spark.sql(
-          s"SELECT\n  $keptSelect\n$joinFrom\nWHERE $keptFilter")
-      else {
-        // inner projections keep both aliases resolvable; the outer
-        // block keeps rank-1 per target row (applicable pair first —
-        // non-applicable pairs all project the unchanged row, so any
-        // tie-break yields identical content) and drops deleted rows
-        val names = tcols.map(f => s"`${f.name}`").mkString(", ")
-        spark.sql(
-          s"""SELECT $names FROM (
-             |  SELECT
-             |  $keptSelect,
-             |  (($delPred) OR ($nbsDelPred)) AS __del,
-             |  row_number() OVER (PARTITION BY $ta.`__tid`
-             |    ORDER BY CASE WHEN $applicablePred THEN 0 ELSE 1 END) AS __rn
-             |  $joinFrom) __m
-             |WHERE __rn = 1 AND NOT coalesce(__del, false)""".stripMargin)
-      }
-    val inserted = p.notMatched.map { nm =>
-      val cols = if (nm.cols.nonEmpty) nm.cols else tcols.map(_.name)
-      require(cols.length == nm.values.length,
-        s"INSERT lists ${cols.length} columns but ${nm.values.length} values")
-      cols.foreach(c => require(tcols.exists(_.name == c),
-        s"INSERT names unknown column '$c' of ${p.table}"))
-      val byCol = cols.zip(nm.values).toMap
-      val proj = tcols.map { f =>
-        byCol.get(f.name) match {
-          case Some(expr) => s"CAST(($expr) AS ${f.dataType.sql}) AS `${f.name}`"
-          case None => s"CAST(NULL AS ${f.dataType.sql}) AS `${f.name}`"
-        }
-      }.mkString(",\n  ")
-      spark.sql(
-        s"""SELECT
-           |  $proj
-           |FROM ${p.sourceRel} AS $sa
-           |LEFT ANTI JOIN $tgtView AS $ta ON (${p.cond})
-           |WHERE coalesce((${nm.cond.getOrElse("true")}), false)""".stripMargin)
-    }
-    Built(kept, inserted, updPred, delPred, applicablePred, joinFrom)
-  }
-
-  private def withTargetView[A](spark: SparkSession, p: Parsed)(
-      f: String => A): A = {
-    val tgtView = "__merge_tgt_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-    Layout.readCurrent(spark, p.table).withColumn("__tid",
-      org.apache.spark.sql.functions.monotonically_increasing_id())
-      .createOrReplaceTempView(tgtView)
-    try f(tgtView)
-    finally { spark.catalog.dropTempView(tgtView); () }
+  /** Trino's `INSERT VALUES (...)` names no columns, which Spark's
+    * grammar requires. In a MERGE, Spark's own lexer finds each INSERT
+    * directly followed by VALUES and names its values by position,
+    * `(__pos_1, ...)`, which [[Plan]] maps to the target's columns in
+    * order. A statement that does not open with MERGE (or a comment)
+    * comes back unchanged, unlexed. */
+  private[engine] def positionalInserts(text: String): String = {
+    val head = text.indexWhere(!_.isWhitespace)
+    if (head < 0 || !(text.regionMatches(true, head, "MERGE", 0, 5) ||
+        text.startsWith("/*", head) || text.startsWith("--", head))) return text
+    // Spark lexes keywords upper-cased; per code point, so positions hold
+    val upper = text.codePoints().map(Character.toUpperCase(_)).toArray
+    val tokens = new CommonTokenStream(
+      new SqlBaseLexer(CharStreams.fromString(new String(upper, 0, upper.length))))
+    if (tokens.LT(1).getType != SqlBaseLexer.MERGE) return text
+    tokens.fill()
+    val ts = tokens.getTokens.asScala.filter(_.getChannel == Token.DEFAULT_CHANNEL).toIndexedSeq
+    ts.indices.filter(i => ts(i).getType == SqlBaseLexer.INSERT &&
+        ts.lift(i + 1).exists(_.getType == SqlBaseLexer.VALUES)).map { i =>
+      // one name per value: the commas at the VALUES list's own depth
+      val list = ts.drop(i + 2)
+      val depths = list.scanLeft(0)((d, t) => t.getType match {
+        case SqlBaseLexer.LEFT_PAREN => d + 1
+        case SqlBaseLexer.RIGHT_PAREN => d - 1
+        case _ => d
+      }).tail
+      val n = 1 + list.zip(depths).takeWhile(_._2 > 0)
+        .count { case (t, d) => t.getType == SqlBaseLexer.COMMA && d == 1 }
+      (text.offsetByCodePoints(0, ts(i).getStopIndex + 1),
+        (1 to n).map(k => s"$Positional$k").mkString(" (", ", ", ")"))
+    }.foldRight(text) { case ((at, names), s) => s.substring(0, at) + names + s.substring(at) }
   }
 
   /** The merged relation a statement WOULD commit — plan construction
     * only (no cardinality jobs, no write): what PlanQualitySpec locks
     * the join shapes on. */
-  private[graft] def planOnly(spark: SparkSession, sql: String): DataFrame = {
-    val p = parse(sql)
-    withTargetView(spark, p) { tgtView =>
-      val b = build(spark, p, tgtView)
-      // analysis resolves the temp view into the plan at construction,
-      // so the relation survives the view drop
-      b.inserted.fold(b.kept)(b.kept.unionByName(_))
+  private[graft] def planOnly(spark: SparkSession, sql: String): DataFrame =
+    spark.sessionState.sqlParser.parsePlan(positionalInserts(sql)) match {
+      case m: MergeIntoTable => new Plan(spark, m, Lakehouse.withRelations(spark)).merged(dedupe = false)
+      case other => throw new IllegalArgumentException(s"not a MERGE statement: ${other.nodeName}")
     }
+
+  /** `CASE WHEN p1 THEN v1 WHEN p2 THEN v2 ... ELSE otherwise END`. */
+  private def firstOf(arms: Seq[(Column, Column)], otherwise: Column): Column =
+    if (arms.isEmpty) otherwise
+    else arms.tail.foldLeft(when(arms.head._1, arms.head._2)) { case (c, (p, v)) => c.when(p, v) }
+      .otherwise(otherwise)
+
+  private def cond(a: MergeAction): Column = column(a.condition.getOrElse(Literal.TrueLiteral))
+
+  /** One statement's plans over its target, read once. */
+  private final class Plan(spark: SparkSession, m: MergeIntoTable,
+      swap: LogicalPlan => LogicalPlan) {
+    val (table, cur) = DmlSql.current(spark, m.targetTable, "MERGE")
+    private val fields = cur.schema.fields.toSeq
+    private val attrs = cur.queryExecution.analyzed.output.map(column)
+    private val tgt = cur.withColumn("__tid", monotonically_increasing_id())
+    private val src = frame(spark, swap(m.sourceTable)).withColumn("__smatch", lit(true))
+    private val on = column(m.mergeCondition)
+    val matched: Seq[MergeAction] = m.matchedActions
+    val bySource: Seq[MergeAction] = m.notMatchedBySourceActions
+    /** The clauses acting on target rows, numbered from 1 in textual
+      * order: the matched ones, then the NOT MATCHED BY SOURCE ones. */
+    val acting: Seq[MergeAction] = matched ++ bySource
+    private val sets: Seq[Map[String, Expression]] = acting.map {
+      case u: UpdateAction =>
+        val set = DmlSql.assignments(u.assignments, "UPDATE SET")
+        set.foreach { case (c, _) => require(fields.exists(_.name == c),
+          s"UPDATE SET names unknown column '$c' of $table") }
+        set.toMap
+      case _: DeleteAction => Map.empty[String, Expression]
+      case other => throw new IllegalArgumentException(
+        s"MERGE supports UPDATE SET <column> = ... or DELETE on target rows, not ${other.sql}")
+    }
+    // a NOT MATCHED BY SOURCE row has no source row: its conditions and
+    // values must resolve against the target alone, or refuse here
+    cur.select(bySource.zip(sets.drop(matched.size)).flatMap { case (a, set) =>
+      cond(a) +: set.values.map(column).toSeq }: _*)
+
+    private def clauses(p: MergeAction => Boolean): Seq[Int] =
+      acting.zipWithIndex.collect { case (a, i) if p(a) => i + 1 }
+    def isAct(ks: Seq[Int]): Column = col("__act").isin(ks: _*)
+    val applicable: Column = col("__act").between(1, matched.size)
+    val updates: Column = isAct(clauses(_.isInstanceOf[UpdateAction]))
+    val deletes: Column = isAct(clauses(_.isInstanceOf[DeleteAction]))
+
+    /** Target⋈source with `__act`, the clause that applies to each pair
+      * (0 = none): CASE WHEN is first-match, the standard's order. */
+    def joined(kind: String): DataFrame = {
+      val smatch = coalesce(col("__smatch"), lit(false))
+      val guards = matched.map(a => smatch && cond(a)) ++ bySource.map(a => !smatch && cond(a))
+      tgt.join(src, on, kind).withColumn("__act",
+        firstOf(guards.zipWithIndex.map { case (g, i) => (g, lit(i + 1)) }, lit(0)))
+    }
+
+    /** The target rows the acting clauses keep or update. `dedupe` keeps
+      * one row per target row (applicable pair first — non-applicable
+      * pairs all project the unchanged row): the path for statements
+      * where some target row has EXTRA matched pairs, which a bare left
+      * join would emit once per pair. */
+    def kept(dedupe: Boolean): DataFrame =
+      if (acting.isEmpty) cur // no clause can change or delete a target row
+      else {
+        val j = joined("left")
+        val one = if (!dedupe) j else j.withColumn("__rn", row_number().over(
+          Window.partitionBy("__tid").orderBy(when(applicable, 0).otherwise(1))))
+          .filter(col("__rn") === 1)
+        one.filter(!deletes).select(fields.zip(attrs).map { case (f, old) =>
+          firstOf(sets.zipWithIndex.collect { case (set, i) if set.contains(f.name) =>
+            (col("__act") === i + 1, column(set(f.name)).cast(f.dataType))
+          }, old).as(f.name)
+        }: _*)
+      }
+
+    /** The source rows with no target match that an INSERT clause takes,
+      * in the target's columns (unlisted ones NULL). */
+    lazy val inserted: Option[DataFrame] =
+      if (m.notMatchedActions.isEmpty) None
+      else {
+        val values = m.notMatchedActions.map {
+          case a: InsertAction => insertValues(a)
+          case other => throw new IllegalArgumentException(
+            s"WHEN NOT MATCHED supports INSERT [(cols)] VALUES (...), not ${other.sql}")
+        }
+        val rows = src.join(tgt, on, "left_anti").withColumn("__ins", firstOf(
+          m.notMatchedActions.zipWithIndex.map { case (a, i) => (cond(a), lit(i + 1)) }, lit(0)))
+        Some(rows.filter(col("__ins") > 0).select(fields.map { f =>
+          firstOf(values.zipWithIndex.collect { case (v, i) if v.contains(f.name) =>
+            (col("__ins") === i + 1, column(v(f.name)).cast(f.dataType))
+          }, lit(null).cast(f.dataType)).as(f.name)
+        }: _*))
+      }
+
+    private def insertValues(a: InsertAction): Map[String, Expression] = {
+      val named = DmlSql.assignments(a.assignments, "INSERT")
+      if (named.exists(_._1.startsWith(Positional))) {
+        require(named.length == fields.length,
+          s"INSERT lists ${fields.length} columns but ${named.length} values")
+        fields.map(_.name).zip(named.map(_._2)).toMap
+      } else {
+        named.foreach { case (c, _) => require(fields.exists(_.name == c),
+          s"INSERT names unknown column '$c' of $table") }
+        named.toMap
+      }
+    }
+
+    def merged(dedupe: Boolean, insertCount: Option[Observation] = None): DataFrame =
+      inserted.fold(kept(dedupe)) { ins =>
+        kept(dedupe).unionByName(insertCount.fold(ins)(o => ins.observe(o, count(lit(1)).as("ins"))))
+      }
   }
 
-  private def execute(spark: SparkSession, sql: String): DataFrame = {
+  private def execute(spark: SparkSession, p: Plan): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{count, lit}
-    val p = parse(sql)
-    withTargetView(spark, p) { tgtView =>
-      val ta = s"`${p.targetAlias}`"
-      val sa = s"`${p.sourceAlias}`"
-      val srcRel = s"(SELECT *, true AS __smatch FROM ${p.sourceRel} ) AS $sa"
-      val b0 = build(spark, p, tgtView)
-      // Fused pre-pass (one aggregate over the matched pairs, skipped
-      // entirely without MATCHED clauses): the standard's cardinality
-      // rule — an update/delete APPLIED by >1 source rows refuses —
-      // plus the raw multi-match maximum (decides whether the kept
-      // side needs the dedupe window) plus Trino's updated/deleted
-      // affected counts, all in the same key-shuffle the merge join
-      // itself pays.
-      var updated = 0L
-      var deleted = 0L
-      var multiMatch = false
-      // the kept side joins whenever ANY clause acts on target rows —
-      // multi-match detection must cover the NOT-MATCHED-BY-SOURCE-only
-      // statement too (its unmatched rows are single, but a
-      // multi-matched row would still duplicate through the left join)
-      if (p.matched.nonEmpty || p.notBySource.nonEmpty) {
-        val pre = spark.sql(
-          s"""SELECT coalesce(max(__app), 0L), coalesce(max(__cnt), 0L),
-             |  coalesce(sum(__u), 0L), coalesce(sum(__d), 0L)
-             |FROM (
-             |  SELECT $ta.`__tid`,
-             |    sum(CASE WHEN ${b0.applicablePred} THEN 1 ELSE 0 END) AS __app,
-             |    count(*) AS __cnt,
-             |    sum(CASE WHEN ${b0.updPred} THEN 1 ELSE 0 END) AS __u,
-             |    sum(CASE WHEN ${b0.delPred} THEN 1 ELSE 0 END) AS __d
-             |  FROM $tgtView AS $ta JOIN $srcRel ON (${p.cond})
-             |  GROUP BY $ta.`__tid`)""".stripMargin).collect().head
+    // Fused pre-pass (one aggregate, skipped without clauses acting on
+    // target rows): the standard's cardinality rule, the raw multi-match
+    // maximum (does the kept side need the dedupe window?) and Trino's
+    // updated/deleted counts. Only NOT MATCHED BY SOURCE needs the
+    // unmatched target rows, so only it pays for the left join here.
+    val (updated, deleted, multiMatch) =
+      if (p.acting.isEmpty) (0L, 0L, false)
+      else {
+        val pre = p.joined(if (p.bySource.isEmpty) "inner" else "left")
+          .groupBy("__tid").agg(
+            sum(when(p.applicable, 1).otherwise(0)).as("app"),
+            count(col("__smatch")).as("pairs"),
+            sum(when(p.updates, 1).otherwise(0)).as("u"),
+            sum(when(p.deletes, 1).otherwise(0)).as("d"))
+          .agg(coalesce(max("app"), lit(0L)), coalesce(max("pairs"), lit(0L)),
+            coalesce(sum("u"), lit(0L)), coalesce(sum("d"), lit(0L))).head()
         val maxApplicable = pre.getLong(0)
         require(maxApplicable <= 1L,
           s"MERGE cardinality violation: an UPDATE or DELETE would be " +
             s"applied to a target row of ${p.table} by $maxApplicable " +
             "source rows — the ON condition plus clause conditions must " +
             "select at most one")
-        multiMatch = pre.getLong(1) > 1L
-        updated = pre.getLong(2)
-        deleted = pre.getLong(3)
+        (pre.getLong(2), pre.getLong(3), pre.getLong(1) > 1L)
       }
-      // NOT MATCHED BY SOURCE affected counts: one anti-join aggregate,
-      // run only when such clauses exist (unmatched target rows never
-      // appear in the inner-join pre-pass). Clause conditions reference
-      // target columns only — a source column here fails analysis
-      // loudly, which is the contract.
-      if (p.notBySource.nonEmpty) {
-        def antiPred(idx: Int): String =
-          if (idx < 0) "false"
-          else {
-            val own =
-              s"coalesce((${p.notBySource(idx).cond.getOrElse("true")}), false)"
-            val priors = p.notBySource.take(idx).map(c =>
-              s"NOT coalesce((${c.cond.getOrElse("true")}), false)")
-            (own +: priors).mkString(" AND ")
-          }
-        val nbsUpd = antiPred(p.notBySource.indexWhere(!_.isDelete))
-        val nbsDel = antiPred(p.notBySource.indexWhere(_.isDelete))
-        val row = spark.sql(
-          s"""SELECT coalesce(sum(CASE WHEN $nbsUpd THEN 1 ELSE 0 END), 0L),
-             |  coalesce(sum(CASE WHEN $nbsDel THEN 1 ELSE 0 END), 0L)
-             |FROM $tgtView AS $ta
-             |LEFT ANTI JOIN $srcRel ON (${p.cond})""".stripMargin)
-          .collect().head
-        updated += row.getLong(0)
-        deleted += row.getLong(1)
-      }
-      val b = if (multiMatch) build(spark, p, tgtView, dedupe = true) else b0
-      // inserted count observed on the COMMITTED materialization — the
-      // reported count and the written rows come from the same
-      // execution, so a non-deterministic source cannot split them
-      val obs = org.apache.spark.sql.Observation(
-        "merge_ins_" + java.util.UUID.randomUUID().toString.take(8))
-      val insertedObs = b.inserted.map(_.observe(obs, count(lit(1)).as("ins")))
-      val merged = insertedObs.fold(b.kept)(b.kept.unionByName(_))
-      Layout.overwrite(spark, p.table, merged, operation = "merge")
-      val insertedCount = insertedObs
-        .map(_ => obs.get("ins").asInstanceOf[Long]).getOrElse(0L)
-      Seq(updated + deleted + insertedCount).toDF("rows")
-    }
+    val obs = Observation("merge_ins_" + java.util.UUID.randomUUID().toString.take(8))
+    Layout.overwrite(spark, p.table, p.merged(multiMatch, Some(obs)), operation = "merge")
+    val insertedCount = p.inserted.fold(0L)(_ => obs.get("ins").asInstanceOf[Long])
+    Seq(updated + deleted + insertedCount).toDF("rows")
   }
 }

@@ -165,4 +165,29 @@ class DmlSqlSpec extends SparkSpec {
     // COW delete-rewrite: all 3 pre-rows delete, 2 survivors re-insert
     assert(feed === Map("delete" -> 3L, "insert" -> 2L))
   }
+
+  test("every SQL INSERT into a versioned table is one append commit, and its " +
+      "snapshot id reads the state right after it") {
+    val t = freshName("dml_ins_")
+    Seq((1L, "a", 1L)).toDF("id", "v", "x").write.saveAsTable(t)
+    Layout.snapshot(spark, t, "base")
+    def appends(): Seq[Long] = Lakehouse.sql(spark,
+      s"SELECT snapshot_id FROM `$t$$snapshots` WHERE operation = 'append' " +
+        "ORDER BY snapshot_id").as[Long].collect().toSeq
+    var model = Seq((1L, "a", 1L))
+    (1 to 3).foreach { k =>
+      Lakehouse.sql(spark, s"INSERT INTO $t VALUES (${k + 1}, 'n$k', $k)")
+      model = model :+ ((k + 1).toLong, s"n$k", k.toLong)
+      val ids = appends()
+      assert(ids.size === k, s"INSERT $k made ${ids.size} append commits in all")
+      assert(Lakehouse.sql(spark, s"SELECT * FROM $t FOR VERSION AS OF ${ids.last}")
+        .as[(Long, String, Long)].collect().sortBy(_._1).toSeq === model)
+    }
+    // a table with no committed head stays a plain Spark table
+    val plain = freshName("dml_plain_")
+    Seq((1L, "a", 1L)).toDF("id", "v", "x").write.saveAsTable(plain)
+    Lakehouse.sql(spark, s"INSERT INTO $plain VALUES (2, 'b', 2)")
+    assert(Manifests.listSnapshots(Manifests.root(spark, plain)).isEmpty)
+    assert(spark.table(plain).count() === 2L)
+  }
 }

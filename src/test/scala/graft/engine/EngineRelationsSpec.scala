@@ -73,6 +73,16 @@ class EngineRelationsSpec extends SparkSpec {
     answer(s"INSERT INTO `$t@etl` VALUES (4, 'd')")
     assert(count(s"SELECT count(*) FROM `$t@etl`") === 4L)
     assert(count(s"SELECT count(*) FROM $t") === 3L)
+
+    // the writes: each parsed once, none registering anything
+    assert(count(s"UPDATE $t SET v = 'u' WHERE id = 1") === 1L)
+    assert(count(s"DELETE FROM $t WHERE id = 3") === 1L)
+    assert(count(s"MERGE INTO $t AS t USING (SELECT * FROM $t FOR VERSION AS OF 'v2') s " +
+      "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v " +
+      "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)") === 3L)
+    assert(count(s"INSERT OVERWRITE $t SELECT * FROM $t FOR VERSION AS OF 'v1'") === 2L)
+    assert(count(s"TRUNCATE TABLE $t") === 2L)
+    assert(count(s"SELECT count(*) FROM $t") === 0L)
   }
 
   test("concurrent get_columns statements on one session each answer their own table") {

@@ -236,4 +236,42 @@ class InfoSchemaSpec extends SparkSpec {
     }
     assert(other.getMessage.contains("my_information_schema"))
   }
+
+  test("schemata and tables answer from catalog metadata without a Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val db = freshName("infojobs_")
+    spark.sql(s"CREATE DATABASE $db")
+    (1 to 3).foreach(i => spark.sql(s"CREATE TABLE $db.t$i (id BIGINT) USING parquet"))
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def inGroup[A](g: String)(body: => A): A = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    def jobs(sql: String): Int = {
+      val g = freshName("infojobs_stmt_")
+      val answer = inGroup(g)(Lakehouse.sql(spark, sql).collect())
+      assert(answer.nonEmpty, sql)
+      // listener events arrive in order: once the marker job is seen,
+      // every job of the statement has been
+      val marker = freshName("infojobs_mark_")
+      inGroup(marker)(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(marker), "the marker job was never seen")
+      groups.toArray.count(_ == g)
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(jobs("SELECT schema_name FROM information_schema.schemata") === 0)
+      assert(jobs("SELECT table_name FROM information_schema.tables " +
+        s"WHERE table_schema = '$db'") === 0)
+    } finally sc.removeSparkListener(listener)
+    spark.sql(s"DROP DATABASE $db CASCADE")
+  }
 }

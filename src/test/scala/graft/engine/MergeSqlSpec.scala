@@ -274,4 +274,21 @@ class MergeSqlSpec extends SparkSpec {
       s"SELECT v FROM $t FOR VERSION AS OF 'pre'").as[String].collect().toSeq
     assert(pre === Seq("old"))
   }
+
+  test("the source is parsed with the statement, so it sees the engine's relations") {
+    val t = freshName("mg_rel_")
+    Seq((1L, "a", 1L), (2L, "b", 2L)).toDF("id", "v", "x").write.saveAsTable(t)
+    Layout.snapshot(spark, t, "orig")
+    Lakehouse.sql(spark, s"UPDATE $t SET v = 'changed', x = 0").collect()
+    Lakehouse.sql(spark, s"DELETE FROM $t WHERE id = 2").collect()
+    // the tag's rows merge back: id 1 reverts, id 2 returns
+    val n = Lakehouse.sql(spark,
+      s"""MERGE INTO $t AS t USING (SELECT * FROM $t FOR VERSION AS OF 'orig') s
+         |ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET v = s.v, x = s.x
+         |WHEN NOT MATCHED THEN INSERT (id, v, x) VALUES (s.id, s.v, s.x)"""
+        .stripMargin).as[Long].collect().head
+    assert(n === 2L)
+    assert(rows(t) === Seq((1L, "a", 1L), (2L, "b", 2L)))
+  }
 }
